@@ -25,9 +25,11 @@ whole-stage-codegen'd end to end.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from questdb_etl_jobs_spark.schemas import PURCHASE_TS_PATTERN
@@ -70,45 +72,45 @@ def gate_files_df(df: DataFrame) -> DataFrame:
     )
 
 
+#: The typed purchases projection, one SQL expression per column so the
+#: whole select is a single ``selectExpr`` the JVM parses (one py4j round
+#: trip instead of one per column function). The PII column is dropped
+#: and replaced by its SHA-1 hex digest (reference cloud_function.py:62-78);
+#: positional casts per reference cloud_function.py:74-76; timestamp
+#: pattern per cloud_function.py:88, its quotes escaped for the SQL literal.
+_TS_PATTERN_SQL = PURCHASE_TS_PATTERN.replace("'", r"\'")
+TYPED_COLUMNS_SQL = (
+    "sha1(email) AS buyer",
+    "try_cast(item_id AS INT) AS item_id",
+    "try_cast(quantity AS INT) AS quantity",
+    "try_cast(price AS INT) AS price",
+    f"try_to_timestamp(purchase_date, '{_TS_PATTERN_SQL}') AS purchase_date",
+    "_corrupt_record",
+)
+
+#: A row quarantines if the CSV line failed to parse or any required field
+#: failed validation/cast (reference sql/create-table.sql:1). The one
+#: spelling of the predicate: the batch split, the run_batch counters and
+#: the streaming split all use it.
+BAD_ROW_SQL = (
+    "_corrupt_record IS NOT NULL OR buyer IS NULL OR item_id IS NULL"
+    " OR quantity IS NULL OR price IS NULL OR purchase_date IS NULL"
+)
+GOOD_ROW_SQL = f"NOT ({BAD_ROW_SQL})"
+
+
 def anonymize_and_cast(raw: DataFrame) -> DataFrame:
-    """Transform raw (all-string) rows to the typed purchases shape.
-
-    The PII column is dropped and replaced by its SHA-1 hex digest
-    (reference cloud_function.py:62-78); positional casts per reference
-    cloud_function.py:74-76; timestamp pattern per cloud_function.py:88.
-    ``try_``-variants yield NULL (not an error) on bad input so invalid
-    values route to quarantine under ANSI mode.
-    """
-    return raw.select(
-        F.sha1(F.col("email")).alias("buyer"),
-        F.col("item_id").try_cast("int").alias("item_id"),
-        F.col("quantity").try_cast("int").alias("quantity"),
-        F.col("price").try_cast("int").alias("price"),
-        F.try_to_timestamp(
-            F.col("purchase_date"), F.lit(PURCHASE_TS_PATTERN)
-        ).alias("purchase_date"),
-        F.col("_corrupt_record"),
-    )
-
-
-def _bad_condition():
-    """A row quarantines if the CSV line failed to parse or any required
-    field failed validation/cast (reference sql/create-table.sql:1)."""
-    return (
-        F.col("_corrupt_record").isNotNull()
-        | F.col("buyer").isNull()
-        | F.col("item_id").isNull()
-        | F.col("quantity").isNull()
-        | F.col("price").isNull()
-        | F.col("purchase_date").isNull()
-    )
+    """Transform raw (all-string) rows to the typed purchases shape
+    (:data:`TYPED_COLUMNS_SQL`). ``try_``-variants yield NULL (not an
+    error) on bad input so invalid values route to quarantine under ANSI
+    mode."""
+    return raw.selectExpr(*TYPED_COLUMNS_SQL)
 
 
 def split_quarantine(typed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split into (good, quarantined) — per-record fault isolation."""
-    bad_cond = _bad_condition()
-    good = typed.filter(~bad_cond).drop("_corrupt_record")
-    bad = typed.filter(bad_cond)
+    good = typed.filter(GOOD_ROW_SQL).drop("_corrupt_record")
+    bad = typed.filter(BAD_ROW_SQL)
     return good, bad
 
 
@@ -116,6 +118,21 @@ def split_quarantine(typed: DataFrame) -> tuple[DataFrame, DataFrame]:
 class BatchResult:
     rows_loaded: int
     rows_quarantined: int
+
+
+def _scan_leaves_half_the_cores(spark: SparkSession, raw: DataFrame) -> bool:
+    """True when a scan of ``raw`` takes at most half the cores, so a
+    second scan of it runs beside the first on cores that would sit idle.
+
+    Spark cuts a source smaller than (cores - 1) x
+    ``spark.sql.files.openCostInBytes`` into splits of that size (4 MB by
+    default) and spreads a larger one over every core; the source size
+    is Spark's own estimate of the relation, the listed files' bytes.
+    """
+    size = raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    cores = spark.sparkContext.defaultParallelism
+    return size <= (cores // 2) * open_cost
 
 
 def run_batch(
@@ -132,6 +149,27 @@ def run_batch(
     return, cloud_function.py:105-115); otherwise loads good rows into the
     designated-ts table and quarantines bad rows, returning counts.
 
+    The table write (or, without a table, a count) carries an Observation
+    that computes both returned counts on its own scan; the quarantine
+    write is a second scan of the source. How the two run depends on the
+    source's size against the cores:
+
+    - A source whose scan takes at most half the cores, such as one
+      hourly export, is quarantined at the same time as the table write,
+      on a worker thread that inherits the caller's job group and local
+      properties. The worker is joined before this returns or raises, and
+      its error is re-raised unchanged (if the table write failed too,
+      that error is its ``__context__``). This write is unconditional: a
+      clean batch pays one extra scan on otherwise idle cores and commits
+      one empty part file, as the streaming quarantine sink does for
+      every micro-batch. It also commits when the table write fails, so a
+      retried call appends the same bad rows again: quarantine delivery
+      is at-least-once.
+    - A larger source, whose scan fills the cores, is quarantined after
+      the table write and only when the Observation counted bad rows; a
+      clean batch scans once, and a failed table write quarantines
+      nothing.
+
     Consistency caveat: the returned counts come from the Observation on
     the table-write scan, while quarantined rows are written by a second,
     independent scan of the source CSV — if the file mutates between the
@@ -145,34 +183,43 @@ def run_batch(
     path = csv_path if csv_path is not None else event["name"]
     raw = read_purchases_csv(spark, path)
     typed = anonymize_and_cast(raw)
-    _good, bad = split_quarantine(typed)
 
-    # Single-pass happy path: the table write carries an Observation
-    # computing both counts while it streams — the source is scanned
-    # exactly once and nothing is cached (persisting a full batch is a
-    # non-plan at 100 TB batch sizes; observe costs two counters per
-    # task). The quarantine pass re-derives the bad slice from the
-    # source ONLY when the observation says bad rows exist — the rare
-    # path pays the second scan, the clean path never does.
-    from pyspark.sql import Observation
-
+    # The counts ride on the table write's own scan as two counters per
+    # task, so nothing is cached (persisting a full batch is a non-plan at
+    # 100 TB batch sizes).
     obs = Observation()
     observed = typed.observe(
         obs,
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum(_bad_condition().cast("long")).alias("n_bad"),
+        F.expr("count(1) AS n_total"),
+        F.expr(f"sum(CAST(({BAD_ROW_SQL}) AS BIGINT)) AS n_bad"),
     )
-    good_observed = observed.filter(~_bad_condition()).drop("_corrupt_record")
-    if table_path is not None:
-        write_designated_ts(good_observed, table_path, "purchase_date")
-        metrics = obs.get
-    else:
+    good = observed.filter(GOOD_ROW_SQL).drop("_corrupt_record")
+    bad = typed.filter(BAD_ROW_SQL)
+
+    def load() -> dict:
+        if table_path is not None:
+            write_designated_ts(good, table_path, "purchase_date")
+            return obs.get
         # No table sink: the count action itself drives the observation.
-        n = good_observed.count()
+        n = good.count()
         metrics = obs.get
         assert metrics["n_total"] - (metrics["n_bad"] or 0) == n
+        return metrics
+
+    def quarantine() -> None:
+        bad.write.mode("append").json(quarantine_path)
+
+    if quarantine_path is not None and _scan_leaves_half_the_cores(spark, raw):
+        with ThreadPoolExecutor(1) as pool:
+            quarantined = pool.submit(inheritable_thread_target(spark)(quarantine))
+            try:
+                metrics = load()
+            finally:
+                quarantined.result()
+    else:
+        metrics = load()
+        if quarantine_path is not None and metrics["n_bad"]:
+            quarantine()
     n_bad = int(metrics["n_bad"] or 0)
     n_good = int(metrics["n_total"]) - n_bad
-    if quarantine_path is not None and n_bad:
-        bad.write.mode("append").json(quarantine_path)
     return BatchResult(rows_loaded=n_good, rows_quarantined=n_bad)

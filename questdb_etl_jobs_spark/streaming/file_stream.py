@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from questdb_etl_jobs_spark.schemas import PURCHASES_RAW
-from questdb_etl_jobs_spark.pipeline import anonymize_and_cast
+from questdb_etl_jobs_spark.pipeline import anonymize_and_cast, split_quarantine
 from questdb_etl_jobs_spark.functions.hashing import stable_id
 from questdb_etl_jobs_spark.plans.designated import (
     upsert_designated_ts,
@@ -120,17 +120,7 @@ def run_stream_to_table(
         raw = stream_purchases_jsonl(spark, input_dir)
     else:
         raise ValueError(f"source_format must be csv or jsonl, got {source_format!r}")
-    typed = anonymize_and_cast(raw)
-    bad_cond = (
-        F.col("_corrupt_record").isNotNull()
-        | F.col("buyer").isNull()
-        | F.col("item_id").isNull()
-        | F.col("quantity").isNull()
-        | F.col("price").isNull()
-        | F.col("purchase_date").isNull()
-    )
-
-    good = typed.filter(~bad_cond).drop("_corrupt_record")
+    good, bad = split_quarantine(anonymize_and_cast(raw))
     good = good.withWatermark("purchase_date", lateness)
     if dedup:
         good = (
@@ -167,8 +157,7 @@ def run_stream_to_table(
         .outputMode("append")
     )
     bad_writer = (
-        typed.filter(bad_cond)
-        .writeStream.foreachBatch(write_bad)
+        bad.writeStream.foreachBatch(write_bad)
         .option("checkpointLocation", f"{checkpoint_path}/bad")
         .outputMode("append")
     )

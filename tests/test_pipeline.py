@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import csv
 import hashlib
+from contextlib import contextmanager
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -181,3 +182,155 @@ def test_jsonl_source_quarantines_malformed(spark, tmp_path):
     assert bad.count() == 2           # broken JSON + non-int item_id
     row = good.collect()[0]
     assert row["item_id"] == 1 and len(row["buyer"]) == 40  # sha1 hex
+
+
+def _event_for(path: str) -> dict:
+    return {"bucket": "b", "contentType": "text/csv", "name": path, "size": "1"}
+
+
+def test_run_batch_builds_its_plan_in_few_py4j_calls(spark, tmp_path, monkeypatch):
+    """Each column function or Column operator built in Python is its own
+    py4j round trip; run_batch passes SQL strings for the JVM to parse
+    instead, so one call stays at about a hundred round trips."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        # py4j's finalizer thread frees garbage-collected proxies at any
+        # time; those are not round trips of the plan build.
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    run_batch(spark, _event_for(SMALL), table_path=str(tmp_path / "warm"),
+              quarantine_path=str(tmp_path / "warm_q"))
+    monkeypatch.setattr(client, "send_command", counting)
+    result = run_batch(spark, _event_for(SMALL), table_path=str(tmp_path / "table"),
+                       quarantine_path=str(tmp_path / "quarantine"))
+    monkeypatch.undo()
+    assert result.rows_loaded == 40
+    assert len(calls) <= 150, len(calls)
+
+
+def test_run_batch_jobs_keep_callers_job_group(spark, tmp_path):
+    """The quarantine write runs on its own thread; its job must still
+    carry the caller's job group, or the UI, the event log and
+    cancelJobGroup lose track of it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(group: str) -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(group))
+
+    try:
+        sc.setJobGroup("run-batch-before", "marker")
+        spark.range(1).collect()
+        sc.setJobGroup("run-batch", "run_batch under a caller's group")
+        run_batch(spark, _event_for(MALFORMED), table_path=str(tmp_path / "table"),
+                  quarantine_path=str(tmp_path / "quarantine"))
+        sc.setJobGroup("run-batch-after", "marker")
+        spark.range(1).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    first = max(jobs_of("run-batch-before")) + 1
+    end = min(jobs_of("run-batch-after"))
+    launched = set(range(first, end))
+    assert len(launched) >= 2  # the table write and the quarantine write
+    assert jobs_of("run-batch") == launched
+
+
+def test_run_batch_raises_quarantine_write_error(spark, tmp_path):
+    """A failing quarantine write (its path is a regular file) fails the
+    call: the error comes back from the quarantine worker, which is joined
+    before run_batch raises."""
+    import threading
+
+    import pytest
+
+    before = set(threading.enumerate())
+    blocker = tmp_path / "quarantine"
+    blocker.write_text("not a directory\n")
+    with pytest.raises(Exception, match="ParentNotDirectoryException"):
+        run_batch(spark, _event_for(MALFORMED), table_path=str(tmp_path / "table"),
+                  quarantine_path=str(blocker))
+    assert blocker.read_text() == "not a directory\n"
+    assert not set(threading.enumerate()) - before
+
+
+@contextmanager
+def _every_scan_fills_the_cores(spark):
+    """Make every source count as large: with a 1-byte open cost Spark
+    spreads even a tiny file over every core, so run_batch quarantines
+    after the table write instead of beside it."""
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try:
+        yield
+    finally:
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+
+
+def test_run_batch_large_source_quarantines_after_the_table(spark, tmp_path):
+    """A source whose scan fills the cores gets no parallel quarantine
+    scan: a clean batch runs one job and writes no quarantine, a batch with
+    bad rows quarantines them after the table write."""
+    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
+
+    sc = spark.sparkContext
+    with _every_scan_fills_the_cores(spark):
+        try:
+            sc.setJobGroup("run-batch-large-clean", "clean source")
+            clean = run_batch(spark, _event_for(SMALL), table_path=str(tmp_path / "t1"),
+                              quarantine_path=str(tmp_path / "q1"))
+            sc.setJobGroup("run-batch-large-bad", "source with bad rows")
+            dirty = run_batch(spark, _event_for(MALFORMED), table_path=str(tmp_path / "t2"),
+                              quarantine_path=str(tmp_path / "q2"))
+        finally:
+            sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    assert (clean.rows_loaded, clean.rows_quarantined) == (40, 0)
+    assert len(tracker.getJobIdsForGroup("run-batch-large-clean")) == 1
+    assert not hadoop_path_exists(spark, str(tmp_path / "q1"))
+    assert len(tracker.getJobIdsForGroup("run-batch-large-bad")) == 2
+    assert spark.read.parquet(str(tmp_path / "t2")).count() == dirty.rows_loaded
+    assert spark.read.json(str(tmp_path / "q2")).count() == dirty.rows_quarantined > 0
+
+
+def test_run_batch_failed_table_write_quarantine(spark, tmp_path):
+    """When the table write fails, a small source's quarantine, written
+    beside it, is still committed (a retry appends it again); a large
+    source's quarantine, written after it, is not written at all."""
+    import pytest
+
+    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
+
+    blocker = tmp_path / "table"
+    blocker.write_text("not a directory\n")
+    n_bad = run_batch(spark, _event_for(MALFORMED)).rows_quarantined
+    with pytest.raises(Exception):
+        run_batch(spark, _event_for(MALFORMED), table_path=str(blocker),
+                  quarantine_path=str(tmp_path / "beside"))
+    assert spark.read.json(str(tmp_path / "beside")).count() == n_bad
+    with _every_scan_fills_the_cores(spark), pytest.raises(Exception):
+        run_batch(spark, _event_for(MALFORMED), table_path=str(blocker),
+                  quarantine_path=str(tmp_path / "after"))
+    assert not hadoop_path_exists(spark, str(tmp_path / "after"))
+    assert blocker.read_text() == "not a directory\n"
+
+
+def test_run_batch_clean_file_leaves_no_quarantine_rows(spark, tmp_path):
+    """A clean batch loads every row; its quarantine, if written at all,
+    reads back as 0 rows."""
+    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
+
+    quarantine = str(tmp_path / "quarantine")
+    result = run_batch(spark, _event_for(SMALL), table_path=str(tmp_path / "table"),
+                       quarantine_path=quarantine)
+    assert (result.rows_loaded, result.rows_quarantined) == (40, 0)
+    assert spark.read.parquet(str(tmp_path / "table")).count() == 40
+    if hadoop_path_exists(spark, quarantine):
+        assert spark.read.json(quarantine).count() == 0
