@@ -505,6 +505,8 @@ def dup_clusters(
       narrow union re-read of checkpoint blocks, and the per-round label
       checkpoints keep the plan from growing.
     """
+    if max_iter < 1:
+        raise ValueError(f"dup_clusters: max_iter must be >= 1, got {max_iter}")
     src, dst = "__cc_src", "__cc_dst"
     # Materialize the (possibly expensive) edge subtree ONCE; every
     # round's sym re-read derives from this checkpoint.

@@ -91,6 +91,21 @@ def configure(spark: SparkSession) -> SparkSession:
             # deployments keep the 128m default — at real scale inputs
             # are many 100 MB+ files with multiple row groups.
             spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
+            # Streaming checkpoints (offset/commit/source logs, state-store
+            # deltas and their checksums) go through the FileSystem-based
+            # manager. The FileContext default asks for link status on
+            # every rename, and without Hadoop's native library the local
+            # FS answers that by forking `readlink`: 1,904 forks for the 12
+            # files of one layerbench stream_ingest run (about 160 per
+            # file), against none here. Both managers commit with the same
+            # rename(2) after the same exists check and keep the .crc
+            # sidecars and state-store checksum files. Cluster deployments
+            # keep Spark's default.
+            spark.conf.set(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager",
+            )
     except Exception:
         pass
     return spark

@@ -40,6 +40,7 @@ from questdb_etl_jobs_spark.operators.dedup import (
     lsh_candidate_pairs,
     signature_and_shingles,
 )
+from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
 
 
 def _verified_pairs(
@@ -98,13 +99,11 @@ def admit_batch(
     survivors = fused.join(losers, id_col, "left_anti")
 
     # 2. Cross-check against the admitted index: batch side is small →
-    #    broadcast its bands; the index streams through map-side.
-    try:
+    #    broadcast its bands; the index streams through map-side. Only a
+    #    provably-absent index means "first batch": a read error on an
+    #    existing one raises instead of re-admitting the whole batch.
+    if hadoop_path_exists(spark, index_path):
         index = spark.read.parquet(index_path)
-        have_index = True
-    except Exception:
-        have_index = False
-    if have_index:
         both = survivors.select(id_col, "signature").unionByName(
             index.select(id_col, "signature")
         )

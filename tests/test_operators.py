@@ -693,6 +693,19 @@ def test_dup_clusters_deep_chain_dup_edges_vs_union_find(spark):
     assert got == want
 
 
+def test_dup_clusters_rejects_max_iter_below_one(spark):
+    """``max_iter < 1`` is a caller error, not a request for one round."""
+    from questdb_etl_jobs_spark.operators.dedup import dup_clusters
+
+    edges = spark.createDataFrame([(2, 1)], "a long, b long")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_iter"):
+            dup_clusters(edges, "a", "b", max_iter=bad)
+    got = {r["node"]: r["cluster"] for r in dup_clusters(
+        edges, "a", "b", max_iter=1).collect()}
+    assert got == {1: 1, 2: 1}
+
+
 def test_stratified_sample_content_keyed(spark):
     """The sample is a pure function of the key: repartitioning doesn't
     change membership, fraction 1.0 keeps everything, 0.0 drops all,

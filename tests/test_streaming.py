@@ -1479,6 +1479,50 @@ def test_maintain_dedup_corpus_admits_only_novel(spark, tmp_path):
     assert corpus.filter("doc_id = 1").head().text == base
 
 
+def test_admit_batch_unreadable_index_raises(spark, tmp_path):
+    """An index that exists but cannot be read (here: a corrupt part
+    file) is a storage error, not "no index yet": admit_batch raises
+    before writing, instead of admitting the whole batch unchecked."""
+    from questdb_etl_jobs_spark.streaming.dedup_stream import admit_batch
+
+    index = tmp_path / "index"
+    index.mkdir()
+    (index / "part-00000.parquet").write_text("not a parquet file\n")
+    batch = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id bigint, text string",
+    )
+    corpus = tmp_path / "corpus"
+    with pytest.raises(Exception):
+        admit_batch(spark, batch, str(corpus), str(index))
+    assert not corpus.exists()
+    assert [p.name for p in index.iterdir()] == ["part-00000.parquet"]
+
+
+def _checkpoint_manager(spark, path) -> str:
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(path)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+    return mgr.getClass().getSimpleName()
+
+
+def test_local_checkpoints_use_filesystem_manager(spark, tmp_path):
+    """On a local master, streaming checkpoints go through the
+    FileSystem-based manager (no per-rename link-status probe), both for
+    the suite's get_spark session and for a session that only went
+    through configure()."""
+    from questdb_etl_jobs_spark.session import configure
+
+    want = "FileSystemBasedCheckpointFileManager"
+    assert _checkpoint_manager(spark, tmp_path) == want
+    fresh = spark.newSession()
+    assert _checkpoint_manager(fresh, tmp_path) != want  # Spark's default
+    assert _checkpoint_manager(configure(fresh), tmp_path) == want
+
+
 def test_replay_settled_drains_left_outer_null_tail(spark, tmp_path):
     """replay_settled owns q166's drain idiom: after it returns, the
     left-outer interval join's NULL-extended rows — which a single
