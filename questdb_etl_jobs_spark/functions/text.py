@@ -28,6 +28,11 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS: list[str] = sorted({w for ws in LANG_MARKERS.values() for w in ws})
 
 
+def _sql_str(word: str) -> str:
+    """``word`` as a Spark SQL string literal (backslash-escaped)."""
+    return "'" + word.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
@@ -130,7 +135,7 @@ def _lang_best_sql(toks: str) -> str:
         "struct(size(filter({toks}, x -> array_contains("
         "array({markers}), x))) AS s, {ni} AS ni)".format(
             toks=toks,
-            markers=", ".join(f"'{w}'" for w in LANG_MARKERS[lang]),
+            markers=", ".join(map(_sql_str, LANG_MARKERS[lang])),
             ni=-i,
         )
         for i, lang in enumerate(LANG_MARKERS)
@@ -163,7 +168,7 @@ def lang_guess(text: Column | str) -> Column:
 
 def _lang_guess_sql(toks: str) -> str:
     """The full :func:`_lang_expr` argmax→name expression as SQL."""
-    langs_arr = ", ".join(f"'{lang}'" for lang in LANG_MARKERS)
+    langs_arr = ", ".join(map(_sql_str, LANG_MARKERS))
     best = _lang_best_sql(toks)
     return (
         f"CASE WHEN ({best}).s > 0 THEN element_at(array({langs_arr}), "
@@ -221,8 +226,8 @@ def text_profile(df: DataFrame, text_col: str) -> DataFrame:
             )
         ).alias("__lb"),
     )
-    langs_arr = ", ".join(f"'{lang}'" for lang in LANG_MARKERS)
-    stop_arr = ", ".join(f"'{w}'" for w in STOPWORDS)
+    langs_arr = ", ".join(map(_sql_str, LANG_MARKERS))
+    stop_arr = ", ".join(map(_sql_str, STOPWORDS))
     out = with_best.select(
         "*",
         F.expr("size(__m.toks)").alias("n_tokens"),

@@ -192,7 +192,9 @@ def tdigest_merge(
 ) -> DataFrame:
     """Merge digests per key: concatenate centroid arrays, one
     re-compression. Associative and order-insensitive up to the
-    documented accuracy bound; input per key is sketch-space."""
+    documented accuracy bound; input per key is sketch-space. Raises
+    ``ValueError`` (inside the Python worker) on a weight that is not
+    positive."""
     key_t = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in partials.select(*keys).schema.fields
@@ -204,6 +206,12 @@ def tdigest_merge(
                             for x in pdfs["means"]])
         w = np.concatenate([np.asarray(x, dtype=np.float64)
                             for x in pdfs["weights"]])
+        if not np.all(w > 0):
+            # A zero weight divides by zero in the merge; a negative or NaN
+            # one has no meaning. Either would emit NaN/inf centroids.
+            raise ValueError(
+                f"tdigest_merge: non-positive centroid weight for key {key_vals}"
+            )
         mm, mw = _compress(m, w, delta)
         return pd.DataFrame(
             [(*key_vals, list(mm), list(mw), float(mw.sum()))],

@@ -9,6 +9,10 @@ Two entry points:
   ``SparkSession``; all confs here are SQL confs that take effect at
   runtime.
 
+For a local master, :func:`get_spark` also puts a small JVM class
+(``jvm/NioLocalFileSystem.java``, compiled once into the user cache by
+:func:`local_fs_classpath`) on the classpath as the ``file://`` filesystem.
+
 Scale posture (100 TB): AQE handles runtime coalescing, skew-join
 splitting, and broadcast demotion/promotion; shuffle-partition count is a
 starting hint only. Nothing here is local-mode-specific except the
@@ -17,10 +21,24 @@ defaults used by tests/bench.
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
 import weakref
+from pathlib import Path
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+#: The ``file://`` filesystem of local sessions built by :func:`get_spark`.
+LOCAL_FS_CLASS = "questdb_etl_jobs_spark.jvm.NioLocalFileSystem"
+_LOCAL_FS_SOURCE = Path(__file__).with_name("jvm") / "NioLocalFileSystem.java"
 
 # Runtime-settable SQL confs applied to any session (ours or the driver's).
 RUNTIME_CONFS: dict[str, str] = {
@@ -111,6 +129,96 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def local_fs_classpath() -> str | None:
+    """Class directory holding :data:`LOCAL_FS_CLASS`, or ``None``.
+
+    Compiled once with ``javac`` against Spark's Hadoop client jar into
+    ``$XDG_CACHE_HOME`` (or ``~/.cache``), keyed by the source, the jar name
+    and the JDK release, and published with one rename so a concurrent
+    caller never sees a half-written directory. Returns ``None``, with one
+    debug record saying why, when ``javac`` or the jar is missing, the
+    compile fails or the cache cannot be written.
+    """
+    javac = shutil.which("javac")
+    if javac is None:
+        _log.debug("no javac on PATH; local sessions keep Hadoop's file system")
+        return None
+    try:
+        spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+        jars = sorted(Path(spark_home, "jars").glob("hadoop-client-api-*.jar"))
+        if not jars:
+            _log.debug("no hadoop-client-api jar under %s; local sessions "
+                       "keep Hadoop's file system", spark_home)
+            return None
+        jdk = Path(os.path.realpath(javac)).parent.parent
+        release = jdk / "release"
+        jdk_id = release.read_bytes() if release.is_file() else bytes(jdk)
+        source = _LOCAL_FS_SOURCE.read_bytes()
+        key = hashlib.sha256(
+            b"\0".join([source, jars[-1].name.encode(), jdk_id])
+        ).hexdigest()[:16]
+        cache = Path(
+            os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache",
+            "questdb_etl_jobs_spark", "jvm",
+        )
+        out = cache / key
+        if out.is_dir():
+            return str(out)
+        cache.mkdir(parents=True, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".build-", dir=cache)
+        try:
+            subprocess.run(
+                [javac, "--release", "17", "-cp", str(jars[-1]),
+                 "-d", tmp, str(_LOCAL_FS_SOURCE)],
+                check=True, capture_output=True, timeout=300,
+            )
+            try:
+                os.replace(tmp, out)
+            except OSError:
+                if not out.is_dir():  # else another process published first
+                    raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return str(out)
+    except (OSError, RuntimeError, subprocess.SubprocessError) as exc:
+        _log.debug("cannot build %s; local sessions keep Hadoop's file "
+                   "system: %s", LOCAL_FS_CLASS, exc)
+        return None
+
+
+def _local_fs_confs(master: str | None) -> dict[str, str]:
+    """Builder confs that make :data:`LOCAL_FS_CLASS` the ``file://``
+    filesystem, or ``{}`` where the session must keep Hadoop's default.
+
+    Without Hadoop's native library, RawLocalFileSystem.setPermission forks
+    `chmod` for every file, .crc sidecar and directory it creates: 850 forks
+    in a 12-file layerbench stream_ingest run (about 70 per file: checkpoint
+    logs, state-store deltas, part files) and 546 in an hourly_ingest run
+    (about 17 per run_batch). LOCAL_FS_CLASS is the same checksummed
+    LocalFileSystem whose raw layer makes one chmod(2) call with the same
+    mode bits instead. Only a local master gets it (``master=None`` is left
+    to spark-submit, which may point it at a cluster whose executors lack
+    the class), and only when this call starts the JVM: the classpath is
+    fixed at JVM launch, so a JVM started elsewhere (spark-submit, an
+    earlier session) could not load the class.
+    """
+    if (
+        master is None
+        or not master.startswith("local")
+        or SparkContext._gateway is not None
+        or "PYSPARK_GATEWAY_PORT" in os.environ
+    ):
+        return {}
+    classes = local_fs_classpath()
+    if classes is None:
+        return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.executor.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS,
+    }
+
+
 def get_spark(
     app_name: str = "questdb-etl-jobs-spark",
     master: str | None = None,
@@ -151,6 +259,8 @@ def get_spark(
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for key, value in RUNTIME_CONFS.items():
+        builder = builder.config(key, value)
+    for key, value in _local_fs_confs(master).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     return configure(spark)

@@ -501,6 +501,38 @@ def test_text_profile_ansi_edge_cases(spark):
     assert rows[4]["lang_guess"] == "en" and rows[4]["n_tokens"] == 4
 
 
+def test_lexicon_words_with_quotes_match_column_path(spark, monkeypatch):
+    # The SQL spellings build string literals from the lexicons; a word
+    # with a quote or backslash must stay one literal, equal to F.lit's.
+    from questdb_etl_jobs_spark.functions import text
+
+    monkeypatch.setattr(text, "LANG_MARKERS", {
+        "en": ["don't", "the"], "xx": ["a\\b", "it's"],
+    })
+    monkeypatch.setattr(text, "STOPWORDS", ["don't", "a\\b", "it's"])
+    df = spark.createDataFrame(
+        [(1, "don't stop"), (2, "it's a\\b it's"), (3, "the end")],
+        "doc_id long, text string",
+    )
+    toks = F.split("text", " ")
+    got = df.select(
+        "doc_id",
+        F.expr(text._lang_best_sql("split(text, ' ')")).alias("sql"),
+        text._lang_best(toks).alias("col"),
+        text.lang_guess("text").alias("guess"),
+        text._lang_expr(toks).alias("guess_col"),
+        text.stopword_ratio("text").alias("stop"),
+    ).orderBy("doc_id").collect()
+    assert [r.sql for r in got] == [r.col for r in got]
+    assert [r.guess for r in got] == [r.guess_col for r in got] == [
+        "en", "xx", "en",
+    ]
+    profile = {r.doc_id: r for r in text.text_profile(df, "text").collect()}
+    assert [profile[r.doc_id].stop_ratio for r in got] == [r.stop for r in got]
+    assert [profile[r.doc_id].lang_guess for r in got] == [r.guess for r in got]
+    assert [r.stop for r in got] == [0.5, 1.0, 0.0]
+
+
 # ---------------------------------------------------------------------------
 # Skew mitigation
 # ---------------------------------------------------------------------------
@@ -2771,6 +2803,22 @@ def test_tdigest_merge_of_splits_matches_whole(spark):
         F.element_at("means", -1).alias("m1"),
     ).first()
     assert ends.lo == ends.m0 and ends.hi == ends.m1
+
+
+def test_tdigest_merge_rejects_non_positive_weights(spark):
+    """A zero or negative centroid weight raises at the merge instead of
+    dividing by zero into NaN/inf centroids."""
+    from pyspark.errors import PythonException
+
+    from questdb_etl_jobs_spark.operators.tdigest import tdigest_merge
+
+    for bad in (0.0, -2.0):
+        partials = spark.createDataFrame(
+            [("g", [1.0, 2.0], [3.0, bad])],
+            "k string, means array<double>, weights array<double>",
+        )
+        with pytest.raises(PythonException, match="non-positive centroid weight"):
+            tdigest_merge(partials, ["k"]).collect()
 
 
 def test_generate_purchases_matches_mirror_and_reference_shape(spark):
