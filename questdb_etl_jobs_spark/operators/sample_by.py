@@ -333,11 +333,13 @@ def fill_gaps(
     # re-reads. localCheckpoint, NOT persist (r19, r18 VERDICT item 8):
     # Dataset.persist registers in the CacheManager and nothing here can
     # unpersist after the caller's last action, so a long-lived session
-    # accumulated one cached-plan entry per call. The lazy local
-    # checkpoint materializes under the first consuming action exactly
-    # like the cache did, but its RDD-level storage is released by the
-    # ContextCleaner when the returned DataFrame is garbage-collected —
-    # no per-call residue. (Same executor-loss caveat as the dedup
+    # accumulated one cached-plan entry per call. Its RDD-level storage
+    # is released by the ContextCleaner when the returned DataFrame is
+    # garbage-collected — no per-call residue. "Lazy" covers only the
+    # final stage: under AQE, building the checkpointed RDD plans the
+    # adaptive query, which runs the aggregate's shuffle-map stage AT
+    # CALL TIME (one job, about 0.15 s of a 0.25 s dashboard SAMPLE BY
+    # FILL build on 4 cores). (Same executor-loss caveat as the dedup
     # loop's checkpoints: use a reliable checkpoint dir on a cluster.)
     agg = agg.localCheckpoint(eager=False)
     if lo_us is not None and hi_us is not None:

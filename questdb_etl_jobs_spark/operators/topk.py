@@ -26,7 +26,11 @@ can possibly be in the answer:
 
 Fewer than k partitions means step 1 cannot certify a bound — the input
 is then at most k× one partition's rows, and the operator falls back to
-the plain single-pass top-k (still exact, trivially sized).
+the plain single-pass top-k (still exact, trivially sized). The fallback
+is decided from the physical plan, with no job, when the input is one
+file scan under narrow operators only (project, filter): the scan's
+split count is its partition count. Any other plan (an exchange, a
+join, a union, an in-memory or local relation) runs step 1 to find out.
 
 Determinism: the total order is ``(value_col DESC, *tiebreak)``; pass 1
 only ever REMOVES rows that provably cannot appear in the answer, so
@@ -39,7 +43,8 @@ embedded-engine baseline's full Top-N rescan (SCALE_DIFF.json
 ``dq34_topk.sf100_pruned``).
 
 The threshold pass runs EAGERLY at call time (it is a driver-side
-decision, k rows collected — bounded by k, never by data size).
+decision, k rows collected — bounded by k, never by data size); a call
+that the plan already shows cannot certify runs no job at all.
 """
 
 from __future__ import annotations
@@ -105,6 +110,32 @@ def _auto_broadcast_bytes(spark) -> int:
         return int(m.group(1)) * mult
 
 
+#: Physical operators that compute each output partition from the same
+#: partition of their only child.
+_NARROW_EXECS = frozenset({
+    "WholeStageCodegenExec", "InputAdapter", "ProjectExec", "FilterExec",
+    "ColumnarToRowExec",
+})
+
+
+def _planned_partitions(df: DataFrame) -> int | None:
+    """The number of partitions ``df`` computes, read from its physical
+    plan without running a job, or None when the plan cannot say.
+
+    Known only for one file scan under narrow operators: planning the
+    scan's splits lists files on the driver. Anything else (an exchange,
+    whose partition count AQE may change at run time, a join, a union, a
+    cached or local relation) gives None."""
+    node = df._jdf.queryExecution().executedPlan()
+    while True:
+        name = node.getClass().getSimpleName()
+        if name == "FileSourceScanExec":
+            return int(node.inputRDD().getNumPartitions())
+        if name not in _NARROW_EXECS:
+            return None
+        node = node.children().apply(0)
+
+
 def _tiebreak_order(tiebreak) -> list[Column]:
     cols: list[Column] = []
     for t in tiebreak or []:
@@ -147,6 +178,10 @@ def topk_by_threshold(
     head = F.asc(value_col) if ascending else F.desc(value_col)
     order = [head] + _tiebreak_order(tiebreak)
 
+    parts = _planned_partitions(df)
+    if parts is not None and parts < k:
+        # Fewer partition extrema than k can never certify a bound.
+        return df.orderBy(*order).limit(k)
     extremum = F.min(value_col) if ascending else F.max(value_col)
     extrema = (
         df.select(value_col)

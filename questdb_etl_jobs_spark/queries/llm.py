@@ -472,16 +472,22 @@ def q48(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _duck_str(word: str) -> str:
+    """``word`` as a DuckDB string literal (a quote is doubled; DuckDB
+    reads backslashes literally)."""
+    return "'" + word.replace("'", "''") + "'"
+
+
 # ---------------------------------------------------------------------------
 # q49 — text quality metrics + language ID (EXT text analysis, DQ-40)
 # ---------------------------------------------------------------------------
 
 def _q49_oracle() -> str:
-    stop_list = ", ".join(f"'{w}'" for w in STOPWORDS)
+    stop_list = ", ".join(map(_duck_str, STOPWORDS))
     score_sql = {
         lang: (
             "len(list_filter(string_split(text, ' '), "
-            f"x -> list_contains([{', '.join(repr(w) for w in ws)}], x)))"
+            f"x -> list_contains([{', '.join(map(_duck_str, ws))}], x)))"
         )
         for lang, ws in LANG_MARKERS.items()
     }
@@ -915,7 +921,7 @@ def _q58_oracle() -> str:
     langs = list(LANG_MARKERS)
     score_cols = []
     for lang in langs:
-        words = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
+        words = ", ".join(map(_duck_str, LANG_MARKERS[lang]))
         score_cols.append(
             f"len(list_filter(string_split(text, ' '),"
             f" t -> list_contains([{words}], t))) AS s_{lang}"
@@ -1100,11 +1106,11 @@ def q62(spark: SparkSession, sf_dir: str) -> DataFrame:
 # expressions fused into the scan, one shuffle for the dedup aggregate.
 
 def _q64_oracle() -> str:
-    stop_list = ", ".join(f"'{w}'" for w in STOPWORDS)
+    stop_list = ", ".join(map(_duck_str, STOPWORDS))
     score_sql = {
         lang: (
             "len(list_filter(toks, "
-            f"x -> list_contains([{', '.join(repr(w) for w in ws)}], x)))"
+            f"x -> list_contains([{', '.join(map(_duck_str, ws))}], x)))"
         )
         for lang, ws in LANG_MARKERS.items()
     }

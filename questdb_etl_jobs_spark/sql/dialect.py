@@ -1756,10 +1756,12 @@ def _rewrite_interval_in(predicate: str, columns: tuple[str, ...] = ()) -> str:
 def _split_top_and(predicate: str) -> list[str] | None:
     """Split a predicate on top-level ``AND``; None if a top-level ``OR``
     makes the split semantically unsafe. Quoted strings and parens are
-    respected."""
+    respected, ``CASE … END`` nests like a paren, and the ``AND`` of a
+    top-level ``BETWEEN … AND …`` stays inside its conjunct."""
     conjuncts: list[str] = []
     depth, i, start, n = 0, 0, 0, len(predicate)
     has_or = False
+    open_betweens = 0
     while i < n:
         ch = predicate[i]
         if ch == "'":
@@ -1770,17 +1772,29 @@ def _split_top_and(predicate: str) -> list[str] | None:
             depth += 1
         elif ch == ")":
             depth -= 1
-        elif depth == 0:
-            m = re.match(r"(AND|OR)\b", predicate[i:], re.IGNORECASE)
+        else:
+            m = re.match(
+                r"(AND|OR|BETWEEN|CASE|END)\b", predicate[i:], re.IGNORECASE
+            )
             word_boundary = i == 0 or not (
-                predicate[i - 1].isalnum() or predicate[i - 1] == "_"
+                predicate[i - 1].isalnum() or predicate[i - 1] in "_."
             )
             if m and word_boundary:
-                if m.group(1).upper() == "OR":
-                    has_or = True
-                else:
-                    conjuncts.append(predicate[start:i].strip())
-                    start = i + 3
+                word = m.group(1).upper()
+                if word == "CASE":
+                    depth += 1
+                elif word == "END":
+                    depth -= 1
+                elif depth == 0:
+                    if word == "BETWEEN":
+                        open_betweens += 1
+                    elif word == "OR":
+                        has_or = True
+                    elif open_betweens:
+                        open_betweens -= 1
+                    else:
+                        conjuncts.append(predicate[start:i].strip())
+                        start = i + 3
                 i += len(m.group(1))
                 continue
         i += 1
@@ -1796,13 +1810,20 @@ def _split_latest_where(
     per key is found first, then filtered). Split the WHERE conjuncts
     accordingly: a conjunct referencing only ``allowed`` columns is a
     pre-filter, anything else is a post-filter. A top-level OR couples
-    the conjuncts, so the whole predicate is classified as one unit."""
+    the conjuncts, so the whole predicate is classified as one unit.
+    Names compare case-insensitively, as Spark resolves them. The ASOF /
+    LT JOIN lowering splits its WHERE the same way: left-only conjuncts
+    filter the left rows before the join."""
     conjuncts = _split_top_and(predicate)
     if conjuncts is None:
         conjuncts = [predicate.strip()]
+    table_columns = {c.lower() for c in table_columns}
+    allowed = {c.lower() for c in allowed}
     pre, post = [], []
     for c in conjuncts:
-        tokens = set(re.findall(r"[A-Za-z_]\w*", re.sub(r"'[^']*'", "''", c)))
+        tokens = set(re.findall(
+            r"[a-z_]\w*", re.sub(r"'[^']*'", "''", c).lower()
+        ))
         referenced = tokens & table_columns
         (pre if referenced <= allowed else post).append(f"({c})")
     return (
@@ -1978,17 +1999,25 @@ def questdb_sql(
     this in table metadata). Standard-SQL queries pass straight through
     to ``spark.sql``.
 
-    **Eager work on the top-k route.** Scan-bound ``ORDER BY … LIMIT``
-    shapes plan through the certified threshold prune, which runs ONE
-    small Spark job at *call* time (a per-partition extrema pass in
-    ``topk_by_threshold``) to certify the prune threshold — a deliberate
-    departure from pure lazy plan-building. The threshold literal is
-    frozen against the table's data as of this call; if the underlying
-    files change between building the DataFrame and acting on it, the
-    final ``orderBy``/``limit`` still guards correctness ONLY while the
-    frozen prune filter covers the answer rows. Re-invoke ``questdb_sql``
-    after data changes rather than caching the returned DataFrame across
-    ingests.
+    **Eager work at call time.** Most shapes only build a plan; two
+    run a Spark job when this function is called:
+
+    - Scan-bound ``ORDER BY … LIMIT k`` shapes plan through the
+      certified threshold prune, which runs ONE small job (a
+      per-partition extrema pass in ``topk_by_threshold``) to certify
+      the prune threshold — unless the input's physical plan already
+      shows fewer than k partitions (one file scan under narrow
+      operators), where no bound can certify and no job runs.
+    - ``SAMPLE BY … FILL`` checkpoints its aggregate
+      (``sample_by.fill_gaps``); under AQE that runs the aggregate's
+      shuffle-map job at call time.
+
+    The threshold literal is frozen against the table's data as of this
+    call; if the underlying files change between building the DataFrame
+    and acting on it, the final ``orderBy``/``limit`` still guards
+    correctness ONLY while the frozen prune filter covers the answer
+    rows. Re-invoke ``questdb_sql`` after data changes rather than
+    caching the returned DataFrame across ingests.
 
     **DECISION (round 13): SAMPLE BY always recomputes — matview
     serving stays an explicit call.** A maintained SAMPLE BY view
@@ -2557,6 +2586,7 @@ def questdb_sql(
 
     ts = designated.get(table) or infer_designated_ts(df.columns)
 
+    where_text = where_m.group(1).strip() if where_m else None
     # ASOF / LT JOIN — right table keyed by ITS designated ts, presented
     # under the left ts name (asof_join shares one `on` column).
     if join_m:
@@ -2631,6 +2661,31 @@ def questdb_sql(
                 )
             df = splice_join(df, right, on=ts, by=by).drop("side")
         else:
+            if where_text and not latest_m:
+                # A left row's match depends only on that row and the
+                # right table, so conjuncts over left columns alone
+                # filter the left rows before the join (their interval
+                # sugar then prunes the left scan's partitions). A
+                # conjunct naming a right output column, or the right
+                # table or alias, stays above the join.
+                left_cols = set(df.columns)
+                right_out = {
+                    c + "_right" if c in left_cols or c == ts else c
+                    for c in right.columns if c not in by
+                }
+                right_quals = {right_name} | (
+                    {join_m.group("ralias")} if join_m.group("ralias")
+                    else set()
+                )
+                below, where_text = _split_latest_where(
+                    where_text,
+                    left_cols | right_out | right_quals,
+                    left_cols - right_out,
+                )
+                if below:
+                    df = df.filter(
+                        F.expr(_rewrite_interval_in(below, tuple(left_cols)))
+                    )
             df = asof_join(
                 df, right, on=ts, by=by, strict=(kind == "LT"),
                 tolerance=tolerance,
@@ -2650,10 +2705,8 @@ def questdb_sql(
             df = df.alias(table)
 
     post_latest_pred: str | None = None
-    if where_m:
-        pred = _rewrite_interval_in(
-            where_m.group(1).strip(), tuple(df.columns)
-        )
+    if where_text:
+        pred = _rewrite_interval_in(where_text, tuple(df.columns))
         if latest_m:
             # QuestDB's LATEST ON filter order: ts/partition-key
             # conjuncts narrow the scan BEFORE latest-row resolution,
@@ -3125,11 +3178,14 @@ def questdb_sql(
     #
     # CONTRACT: the route's threshold pass runs a Spark job AT CALL
     # TIME (a bounded k-row collect — a driver-side plan decision, never
-    # data-sized). questdb_sql therefore validates the ENTIRE query
-    # before lowering (see the fragment check above), so a rejected
-    # query never triggers the job; callers composing questdb_sql
-    # lazily inside pipelines should know the returned DataFrame's
-    # threshold literal is fixed at build time.
+    # data-sized), except where the plan shows fewer scan partitions
+    # than k (no bound can certify; no job). SAMPLE BY FILL's aggregate
+    # checkpoint runs one job at call time too (under AQE).
+    # questdb_sql therefore validates the ENTIRE query before lowering
+    # (see the fragment check above), so a rejected query never
+    # triggers a job; callers composing questdb_sql lazily inside
+    # pipelines should know the returned DataFrame's threshold literal
+    # is fixed at build time.
     _ident = r"[A-Za-z_]\w*"
     shape_ok = bool(
         order_items

@@ -5247,3 +5247,304 @@ def test_string_agg_is_ts_ordered(spark):
             "GROUP BY sym",
             d,
         )
+
+
+# ---------------------------------------------------------------------------
+# Fixed per-query cost of the dashboard shapes: call-time jobs, py4j round
+# trips, and left-only WHERE conjuncts below ASOF / LT JOIN
+# ---------------------------------------------------------------------------
+
+#: The designated timestamps of the dashboard-shaped tables below.
+_DASH = {"__dash_purchases": "purchase_date", "__dash_prices": "price_ts"}
+
+
+@pytest.fixture(scope="module")
+def dash_tables(spark, tmp_path_factory):
+    """A three-day purchases table and an item price table, both written
+    and registered as designated-ts parquet tables (one file per day)."""
+    import datetime as dt
+
+    from questdb_etl_jobs_spark.plans.designated import (
+        register_designated_table,
+        write_designated_ts,
+    )
+
+    base = tmp_path_factory.mktemp("dash")
+    t0 = dt.datetime(2024, 1, 1)
+    purchases = [
+        (f"b{(7 * i) % 40}", i % 5, 1 + i % 4, float((37 * i) % 101),
+         t0 + dt.timedelta(minutes=9 * i))
+        for i in range(3 * 24 * 60 // 9)
+    ]
+    prices = [
+        (t0 + dt.timedelta(hours=h), item, 100 * item + h)
+        for h in range(0, 72, 6)
+        for item in range(5)
+    ]
+    write_designated_ts(
+        spark.createDataFrame(
+            purchases,
+            "buyer string, item_id int, quantity int, price double, "
+            "purchase_date timestamp",
+        ).coalesce(1),
+        str(base / "purchases"), "purchase_date",
+    )
+    write_designated_ts(
+        spark.createDataFrame(
+            prices, "price_ts timestamp, item_id int, list_price int"
+        ).coalesce(1),
+        str(base / "prices"), "price_ts",
+    )
+    register_designated_table(
+        spark, "__dash_purchases", str(base / "purchases")
+    )
+    register_designated_table(spark, "__dash_prices", str(base / "prices"))
+    return base
+
+
+def _call_time_jobs(spark, build):
+    """Run ``build()`` under a fresh job group; return its result and the
+    number of Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"call-time-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "call-time jobs")
+    try:
+        out = build()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dashboard_shapes_call_time_jobs(spark, dash_tables):
+    """Building each dashboard query starts no Spark job, except SAMPLE
+    BY FILL: its aggregate's lazy localCheckpoint plans the adaptive
+    query, which runs the aggregate's shuffle-map job when the query is
+    built."""
+    day = "WHERE purchase_date IN '2024-01-02'"
+    cols = "buyer, item_id, quantity, price, purchase_date"
+    shapes = {
+        "interval": (f"SELECT {cols} FROM __dash_purchases {day} "
+                     "ORDER BY purchase_date", 0),
+        "sample_by_fill": ("SELECT purchase_date, count() n, "
+                           "sum(quantity) qty FROM __dash_purchases "
+                           f"{day} AND item_id = 3 SAMPLE BY 1h FILL(0)", 1),
+        "latest_on": (f"SELECT {cols} FROM __dash_purchases {day} "
+                      "LATEST ON purchase_date PARTITION BY buyer", 0),
+        "asof_join": ("SELECT purchase_date, buyer, item_id, quantity, "
+                      "list_price FROM __dash_purchases ASOF JOIN "
+                      f"__dash_prices ON item_id {day}", 0),
+        # One file per day: far fewer scan partitions than k = 25.
+        "topk": (f"SELECT {cols} FROM __dash_purchases {day} "
+                 "ORDER BY price DESC, purchase_date LIMIT 25", 0),
+    }
+    got = {}
+    for name, (sql, _) in shapes.items():
+        df, jobs = _call_time_jobs(
+            spark, lambda sql=sql: questdb_sql(spark, sql, _DASH)
+        )
+        assert df.count() > 0, name
+        got[name] = jobs
+    assert got == {name: jobs for name, (_, jobs) in shapes.items()}
+
+
+def test_topk_route_below_k_partitions_runs_no_job(spark, dash_tables):
+    """With fewer scan partitions than k, the certify pass cannot find a
+    bound, so the route plans the plain top-k without running it; LIMIT 1
+    on the same scan still certifies its bound and filters on it."""
+    sql = ("SELECT buyer, item_id, quantity, price, purchase_date "
+           "FROM __dash_purchases WHERE purchase_date IN '2024-01-02' "
+           "ORDER BY price DESC, purchase_date LIMIT {k}")
+    out, jobs = _call_time_jobs(
+        spark, lambda: questdb_sql(spark, sql.format(k=25), _DASH)
+    )
+    assert jobs == 0
+    plain = (
+        spark.table("__dash_purchases")
+        .filter("purchase_date >= TIMESTAMP '2024-01-02' "
+                "AND purchase_date < TIMESTAMP '2024-01-03'")
+        .orderBy(F.desc("price"), F.asc("purchase_date"))
+        .limit(25)
+        .select("buyer", "item_id", "quantity", "price", "purchase_date")
+    )
+    assert out.collect() == plain.collect()
+    one = questdb_sql(spark, sql.format(k=1), _DASH)
+    plan = one._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"\(price#\d+ >= ", plan), plan
+    assert one.collect() == plain.limit(1).collect()
+
+
+def test_asof_route_builds_in_few_py4j_calls(spark, dash_tables, monkeypatch):
+    """The ASOF lowering passes SQL strings for the JVM to parse, so the
+    dashboard's ASOF query builds in a bounded number of py4j round
+    trips, whatever the column count."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    sql = ("SELECT purchase_date, buyer, item_id, quantity, list_price "
+           "FROM __dash_purchases ASOF JOIN __dash_prices ON item_id "
+           "WHERE purchase_date IN '2024-01-02'")
+    questdb_sql(spark, sql, _DASH)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        # py4j's finalizer thread frees garbage-collected proxies at any
+        # time; those are not round trips of the plan build.
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    questdb_sql(spark, sql, _DASH)
+    monkeypatch.undo()
+    assert len(calls) <= 150, len(calls)
+
+
+@pytest.fixture(scope="module")
+def asof_pushdown_tables(spark, tmp_path_factory):
+    """Designated-ts parquet trades (left) and quotes (right) over three
+    days; both carry a ``price`` column, so the right one clashes."""
+    import datetime as dt
+
+    from questdb_etl_jobs_spark.plans.designated import (
+        register_designated_table,
+        write_designated_ts,
+    )
+
+    base = tmp_path_factory.mktemp("asof_pushdown")
+    t0 = dt.datetime(2024, 1, 1)
+    trades = [
+        (t0 + dt.timedelta(days=d, hours=h, minutes=15), s,
+         float(10 * d + h), 100 * d + h)
+        for d in range(3) for h in range(0, 24, 3) for s in ("AAA", "BBB")
+    ]
+    quotes = [
+        (t0 + dt.timedelta(days=d, hours=h), s,
+         float(10 * d + h) + (0.5 if s == "BBB" else 0.0), float(h))
+        for d in range(3) for h in range(0, 24, 5) for s in ("AAA", "BBB")
+    ]
+    write_designated_ts(
+        spark.createDataFrame(
+            trades, "ts timestamp, sym string, price double, qty long"
+        ),
+        str(base / "left_trades"), "ts",
+    )
+    write_designated_ts(
+        spark.createDataFrame(
+            quotes, "ts timestamp, sym string, bid double, price double"
+        ),
+        str(base / "right_quotes"), "ts",
+    )
+    register_designated_table(spark, "__pd_t", str(base / "left_trades"))
+    register_designated_table(spark, "__pd_q", str(base / "right_quotes"))
+
+
+def _left_scan_filters(df) -> str:
+    """The PartitionFilters and PushedFilters of the left table's scan,
+    untruncated."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = [
+        leaves.apply(i).metadata()
+        for i in range(leaves.length())
+        if "left_trades" in leaves.apply(i).metadata().apply("Location")
+    ]
+    assert len(scans) == 1
+    return " ".join(
+        f"{key}: {scans[0].apply(key)}"
+        for key in ("PartitionFilters", "PushedFilters")
+    )
+
+
+@pytest.mark.parametrize(
+    "join, where, above, below, not_below",
+    [
+        ("ASOF JOIN __pd_q ON sym", "ts IN '2024-01-02'",
+         "ts >= TIMESTAMP '2024-01-02' AND ts < TIMESTAMP '2024-01-03'",
+         ["ts_pdate", "GreaterThanOrEqual(ts,"], []),
+        ("LT JOIN __pd_q ON sym", "ts IN '2024-01-02' AND qty > 110",
+         "ts >= TIMESTAMP '2024-01-02' AND ts < TIMESTAMP '2024-01-03' "
+         "AND qty > 110",
+         ["ts_pdate", "GreaterThan(qty,110)"], []),
+        ("ASOF JOIN __pd_q ON sym TOLERANCE 2h",
+         "ts IN '2024-01-03' AND bid IS NULL",
+         "ts >= TIMESTAMP '2024-01-03' AND ts < TIMESTAMP '2024-01-04' "
+         "AND bid IS NULL",
+         ["ts_pdate"], ["bid"]),
+        ("t ASOF JOIN __pd_q ON sym",
+         "t.ts IN '2024-01-02' AND t.sym = 'AAA'",
+         "ts >= TIMESTAMP '2024-01-02' AND ts < TIMESTAMP '2024-01-03' "
+         "AND sym = 'AAA'",
+         ["ts_pdate", "EqualTo(sym,AAA)"], []),
+        ("t ASOF JOIN __pd_q q ON sym",
+         "q.price < 15 AND t.price > 12 AND q.sym = 'BBB'",
+         "price_right < 15 AND price > 12 AND "
+         "(CASE WHEN ts_right IS NOT NULL THEN sym END) = 'BBB'",
+         ["GreaterThan(price,12.0)"],
+         ["LessThan(price", "EqualTo(sym", "ts_pdate"]),
+        ("ASOF JOIN __pd_q ON sym",
+         "ts IN '2024-01-03' AND price > 23 AND bid > price",
+         "ts >= TIMESTAMP '2024-01-03' AND ts < TIMESTAMP '2024-01-04' "
+         "AND price > 23 AND bid > price",
+         ["ts_pdate", "GreaterThan(price,23.0)"], ["bid"]),
+        ("ASOF JOIN __pd_q ON sym", "ts IN '2024-01-02' OR bid > 25",
+         "(ts >= TIMESTAMP '2024-01-02' AND ts < TIMESTAMP '2024-01-03') "
+         "OR bid > 25",
+         [], ["ts_pdate", "(ts,", "bid"]),
+        ("ASOF JOIN __pd_q ON sym",
+         "price BETWEEN 12 AND 14 AND bid BETWEEN 0 AND 30",
+         "price BETWEEN 12 AND 14 AND bid BETWEEN 0 AND 30",
+         ["GreaterThanOrEqual(price,12.0)", "LessThanOrEqual(price,14.0)"],
+         ["bid"]),
+    ],
+    ids=["asof", "lt", "tolerance", "left_alias", "right_alias", "mixed",
+         "or_across_sides", "between"],
+)
+def test_asof_where_pushdown_keeps_rows(
+    spark, asof_pushdown_tables, join, where, above, below, not_below
+):
+    """Left-only WHERE conjuncts filter the left rows before ASOF / LT
+    JOIN (reaching the left scan's partition and pushed filters); the
+    rows equal the as-of join followed by the whole filter."""
+    from questdb_etl_jobs_spark.operators.asof import asof_join
+
+    out = questdb_sql(
+        spark, f"SELECT * FROM __pd_t {join} WHERE {where}",
+        {"__pd_t": "ts", "__pd_q": "ts"},
+    )
+    filters = _left_scan_filters(out)
+    tol = re.search(r"TOLERANCE (\w+)", join)
+    want = asof_join(
+        spark.table("__pd_t"), spark.table("__pd_q"), on="ts", by=["sym"],
+        strict="LT JOIN" in join, tolerance=tol.group(1) if tol else None,
+    ).filter(above)
+    got = sorted(map(repr, out.collect()))
+    assert got and got == sorted(map(repr, want.select(out.columns).collect()))
+    for s in below:
+        assert s in filters, (s, filters)
+    for s in not_below:
+        assert s not in filters, (s, filters)
+
+
+def test_latest_on_where_split_keeps_between_and_ignores_case(spark, trades):
+    """LATEST ON's WHERE split keeps a BETWEEN's own AND inside its
+    conjunct, and a value filter spelled in another case still applies
+    AFTER the latest row per key is found."""
+    d = {"trades": "ts"}
+    got = questdb_sql(
+        spark,
+        "SELECT * FROM trades WHERE price BETWEEN 10 AND 13 "
+        "AND ts IN '2024-01-01' LATEST ON ts PARTITION BY sym",
+        d,
+    ).collect()
+    assert sorted((r.sym, r.price) for r in got) == [
+        ("AAA", 13.0), ("BBB", 13.0)
+    ]
+    # The latest rows (price 23) fail the filter: nothing is left.
+    assert questdb_sql(
+        spark,
+        "SELECT * FROM trades WHERE PRICE < 20 LATEST ON ts PARTITION BY sym",
+        d,
+    ).collect() == []

@@ -4,6 +4,7 @@ tiebreaks, dedup winners, sketches, similarity."""
 from __future__ import annotations
 
 import math
+import re
 from datetime import datetime
 
 import pytest
@@ -531,6 +532,36 @@ def test_lexicon_words_with_quotes_match_column_path(spark, monkeypatch):
     assert [profile[r.doc_id].stop_ratio for r in got] == [r.stop for r in got]
     assert [profile[r.doc_id].lang_guess for r in got] == [r.guess for r in got]
     assert [r.stop for r in got] == [0.5, 1.0, 0.0]
+
+
+def test_duckdb_oracles_escape_lexicon_quotes(monkeypatch):
+    """The q49, q58 and q64 oracles spell the lexicons as DuckDB string
+    literals: a word with a quote must stay one literal."""
+    import duckdb
+
+    from questdb_etl_jobs_spark.queries import llm
+
+    monkeypatch.setattr(llm, "LANG_MARKERS", {
+        "en": ["don't", "the"], "xx": ["it's"],
+    })
+    monkeypatch.setattr(llm, "STOPWORDS", ["don't", "it's"])
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT * FROM (VALUES "
+        "(1, 'en', 'don''t stop'), (2, 'xx', 'it''s it''s here'), "
+        "(3, 'en', 'the end')) t(doc_id, lang, text)"
+    )
+    cur = con.execute(llm._q49_oracle())
+    cols = [d[0] for d in cur.description]
+    q49 = [dict(zip(cols, r)) for r in cur.fetchall()]
+    assert [r["lang_guess"] for r in q49] == ["en", "xx", "en"]
+    assert [r["stop_ratio"] for r in q49] == [0.5, 0.6667, 0.0]
+    assert con.execute(llm._q58_oracle()).fetchall() == [
+        ("en", "en", 2), ("xx", "xx", 1),
+    ]
+    # q64 keeps only long English documents: none here, but its SQL must
+    # parse and bind.
+    assert con.execute(llm._q64_oracle()).fetchall() == []
 
 
 # ---------------------------------------------------------------------------
@@ -2923,6 +2954,43 @@ def test_topk_threshold_prune_filter_reaches_scan(spark, tmp_path):
     out = topk_by_threshold(df, "v", 3, tiebreak=["id"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(v), GreaterThanOrEqual(v" in plan
+
+
+def test_topk_threshold_skips_certify_pass_below_k_partitions(spark, tmp_path):
+    """A pass over fewer partitions than k cannot certify a bound. On a
+    file scan the operator reads the split count from the plan and runs
+    no job; behind an exchange it still runs the pass, which certifies
+    once there are k partitions."""
+    from questdb_etl_jobs_spark.operators.topk import (
+        _planned_partitions,
+        topk_by_threshold,
+    )
+
+    path = str(tmp_path / "t")
+    spark.range(0, 2_000).select(
+        F.col("id"), (F.col("id") % 97 * 1.0).alias("v")
+    ).coalesce(2).write.parquet(path)
+    df = spark.read.parquet(path).filter("id > 10")
+    parts = _planned_partitions(df)
+    assert parts == df.rdd.getNumPartitions() and parts < 10
+    assert _planned_partitions(df.repartition(12)) is None
+
+    sc = spark.sparkContext
+    sc.setJobGroup("topk-below-k", "topk_by_threshold call")
+    try:
+        out = topk_by_threshold(df, "v", 10, tiebreak=["id"])
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("topk-below-k")) == []
+    plain = df.orderBy(F.desc("v"), F.asc("id")).limit(10)
+    assert out.collect() == plain.collect()
+
+    wide = df.repartition(12)
+    pruned = topk_by_threshold(wide, "v", 10, tiebreak=["id"])
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"v#\d+ >= ", plan), plan
+    assert pruned.collect() == plain.collect()
 
 
 def test_bottomk_threshold_prune_equals_plain_asc(spark):
