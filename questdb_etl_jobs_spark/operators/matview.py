@@ -124,12 +124,9 @@ def refresh_sample_by_view(
         touched.unionByName(fresh), keys
     ).withColumn(_PDATE, F.to_date("bucket_ts"))
     materialized = merged.localCheckpoint(eager=True)
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        materialized.write.partitionBy(_PDATE).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    materialized.write.partitionBy(_PDATE).mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
 
 
 def read_sample_by_view(spark: SparkSession, path: str) -> DataFrame:
@@ -607,12 +604,9 @@ def refresh_sample_by_view_exactly_once(
             f"could not obtain a stable staged snapshot of {staged} "
             "after 8 attempts (compactions kept landing mid-resolve)"
         ) from last_err
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        materialized.write.partitionBy(_PDATE).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    materialized.write.partitionBy(_PDATE).mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
 
 
 def compact_staged_batches(

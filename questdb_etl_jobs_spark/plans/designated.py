@@ -6,9 +6,9 @@ it and enables time-series queries (reference sql/create-table.sql:1
 notion, so we make it a storage convention — pure library code, no custom
 Catalyst rules:
 
-- writer: partition directories by UTC date of the ts column
-  (``<col>_pdate=YYYY-MM-DD``) + ``sortWithinPartitions(ts)`` so every
-  parquet file is time-ordered and carries tight min/max row-group stats;
+- writer (:func:`_write_days`, the one place the layout is written):
+  one directory per UTC date of the ts column (``<col>_pdate=YYYY-MM-DD``)
+  holding time-ordered files with tight min/max row-group stats;
 - reader: time-range predicates prune partitions statically (Catalyst
   partition pruning on the derived date column) and row groups via parquet
   stats — the scan never touches out-of-range data.
@@ -176,6 +176,46 @@ def to_stored_names(df: DataFrame, meta: dict | None) -> DataFrame:
     )
 
 
+def _write_days(
+    df: DataFrame,
+    path: str,
+    ts_col: str,
+    mode: str,
+    *,
+    file_format: str = "parquet",
+    one_file_per_day: bool = False,
+) -> None:
+    """Write ``df`` (which already carries ``<ts_col>_pdate``) in the
+    designated-ts layout: one ``<ts_col>_pdate=YYYY-MM-DD`` directory per
+    day, every file sorted by ``ts_col``. Every designated-table write in
+    this module goes through here.
+
+    The sort key MUST lead with the partition column: FileFormatWriter
+    requires task rows ordered by partition columns and injects its own
+    (ts-order-destroying) sort when the incoming ordering doesn't
+    already satisfy that prefix. (pcol, ts) satisfies it AND yields
+    time-ordered files.
+
+    ``mode`` is a Spark save mode, or ``"replace_days"``: overwrite only
+    the day directories ``df`` holds (dynamic partition overwrite). The
+    overwrite mode is an option of this one writer, never the session
+    conf, so concurrent writers in the session keep their own.
+    ``one_file_per_day`` first shuffles on the day, so each directory's
+    rows meet in one task and land as exactly one file.
+    """
+    pcol = ts_col + PARTITION_SUFFIX
+    if one_file_per_day:
+        df = df.repartition(F.col(pcol))
+    writer = df.sortWithinPartitions(pcol, ts_col).write
+    if mode == "replace_days":
+        writer = writer.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        )
+    else:
+        writer = writer.mode(mode)
+    writer.partitionBy(pcol).format(file_format).save(path)
+
+
 def write_designated_ts(
     df: DataFrame,
     path: str,
@@ -205,18 +245,9 @@ def write_designated_ts(
     statement-time enforcement.
     """
     pcol = ts_col + PARTITION_SUFFIX
-    # Sort key MUST lead with the partition column: FileFormatWriter
-    # requires task rows ordered by partition columns and injects its own
-    # (ts-order-destroying) sort when the incoming ordering doesn't
-    # already satisfy that prefix. (pcol, ts) satisfies it AND yields
-    # time-ordered files.
-    (
-        df.withColumn(pcol, F.to_date(F.col(ts_col)))
-        .sortWithinPartitions(pcol, ts_col)
-        .write.mode(mode)
-        .partitionBy(pcol)
-        .format(file_format)
-        .save(path)
+    _write_days(
+        df.withColumn(pcol, F.to_date(F.col(ts_col))),
+        path, ts_col, mode, file_format=file_format,
     )
     if ttl_days is not None:
         spark = df.sparkSession
@@ -299,24 +330,15 @@ def compact_designated(
     convention's contract (few large, time-sorted files with tight
     row-group stats).
 
-    Plan: one shuffle hashed on the partition date — every directory's
-    rows converge on a single task, so each directory is rewritten as
-    exactly one file — then ``sortWithinPartitions`` re-establishes time
-    order. Writes to ``dst_path`` (never in-place: Spark cannot safely
-    overwrite a path it is reading; callers atomically swap directories,
-    or run per-partition with dynamic partition overwrite for a live
-    table).
+    Plan: one shuffle hashed on the partition date, so each directory
+    is rewritten as exactly one time-sorted file. Writes to
+    ``dst_path`` (never in-place: Spark cannot safely overwrite a path
+    it is reading; callers atomically swap directories, as
+    :func:`vacuum_designated` does).
     """
-    pcol = ts_col + PARTITION_SUFFIX
-    df = spark.read.parquet(src_path)
-    (
-        df.repartition(F.col(pcol))
-        # Leading pcol keeps the writer from injecting its own sort
-        # (see write_designated_ts).
-        .sortWithinPartitions(pcol, ts_col)
-        .write.mode("error")
-        .partitionBy(pcol)
-        .parquet(dst_path)
+    _write_days(
+        spark.read.parquet(src_path), dst_path, ts_col, "error",
+        one_file_per_day=True,
     )
 
 
@@ -430,20 +452,10 @@ def update_from_designated_ts(
             "target row(s) match more than one source row — "
             "deduplicate the source on the join key first"
         )
-    materialized = to_stored_names(ck.drop("__qdb_rid"), meta)
-    saved = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
+    _write_days(
+        to_stored_names(ck.drop("__qdb_rid"), meta), path, ts_col,
+        "replace_days",
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            materialized.sortWithinPartitions(pcol, ts_col)
-            .write.mode("overwrite")
-            .partitionBy(pcol)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
     return sorted(str(d) for d in dates)
 
 
@@ -561,7 +573,6 @@ def alter_column_type(
             "ATTACH — attach or drop them first"
         )
     dates = list_partitions(spark, path, ts_col)
-    pcol = ts_col + PARTITION_SUFFIX
     tmp, commit = _swap_in_place(spark, path, tmp_suffix=".__retype")
     new_cols = [
         (n, new_spark_type if n == col else st, new_qdb_type
@@ -572,13 +583,9 @@ def alter_column_type(
         df = read_declared(spark, path, meta).withColumn(
             col, F.col(col).cast(new_spark_type)
         )
-        (
-            to_stored_names(df, meta)
-            .repartition(F.col(pcol))
-            .sortWithinPartitions(pcol, ts_col)
-            .write.mode("error")
-            .partitionBy(pcol)
-            .parquet(tmp)
+        _write_days(
+            to_stored_names(df, meta), tmp, ts_col, "error",
+            one_file_per_day=True,
         )
     write_table_meta(
         spark, tmp, new_cols, ts_col, dedup_keys=meta.get("dedup_keys")
@@ -599,7 +606,8 @@ def vacuum_designated(
     files — at 100 TB they collapse scan parallelism into file-open
     overhead).
 
-    Sequence: :func:`compact_designated` rewrites into a temp sibling
+    Sequence: the table is rewritten one file per day, as
+    :func:`compact_designated` does, into a temp sibling
     (``<path>.__vacuum``) — the read is entirely consumed before any
     swap, so Spark never overwrites what it is reading — then the
     declared-schema sidecar is copied in, the live directory moves to
@@ -619,39 +627,27 @@ def vacuum_designated(
         return []
     tmp, commit = _swap_in_place(spark, path, tmp_suffix=".__vacuum")
     meta = read_table_meta(spark, path)
-    pcol = ts_col + PARTITION_SUFFIX
     if pending_update_seqs(spark, path):
         # Merge-on-read fold: compact THROUGH the delta face, so the
         # vacuumed tree holds the post-update rows and the .updates
         # sidecar dies with the old tree — VACUUM is the compaction
         # the MoR face defers to (QuestDB's column-version reclaim,
         # same statement).
-        df = to_stored_names(
-            read_designated_merged(spark, path, ts_col), meta
-        )
-        (
-            df.repartition(F.col(pcol))
-            .sortWithinPartitions(pcol, ts_col)
-            .write.mode("error")
-            .partitionBy(pcol)
-            .parquet(tmp)
-        )
+        df = read_designated_merged(spark, path, ts_col)
     elif meta is not None:
         # Declared table: compact through the DECLARED schema, not
         # footer inference — a column ADDed after early files were
         # written is absent from those footers, and an inference that
         # sampled an old footer would silently drop it from the
-        # compacted output. Stored names land back in the files.
-        df = to_stored_names(read_declared(spark, path, meta), meta)
-        (
-            df.repartition(F.col(pcol))
-            .sortWithinPartitions(pcol, ts_col)
-            .write.mode("error")
-            .partitionBy(pcol)
-            .parquet(tmp)
-        )
+        # compacted output.
+        df = read_declared(spark, path, meta)
     else:
-        compact_designated(spark, path, tmp, ts_col)
+        df = spark.read.parquet(path)
+    # Stored names land back in the files (a no-op without a sidecar).
+    _write_days(
+        to_stored_names(df, meta), tmp, ts_col, "error",
+        one_file_per_day=True,
+    )
     meta_src = jvm.org.apache.hadoop.fs.Path(f"{path}/{TABLE_META_FILE}")
     if fs.exists(meta_src):
         futil = jvm.org.apache.hadoop.fs.FileUtil
@@ -779,19 +775,10 @@ def upsert_designated_ts(
         .select(ts_col, *keys, pcol, *[f"__w.{c}" for c in value_cols])
         .select(*cols)  # restore original column order
     )
-    materialized = to_stored_names(merged.localCheckpoint(eager=True), meta)
-
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            materialized.sortWithinPartitions(pcol, ts_col)
-            .write.mode("overwrite")
-            .partitionBy(pcol)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    _write_days(
+        to_stored_names(merged.localCheckpoint(eager=True), meta),
+        path, ts_col, "replace_days",
+    )
     return pcol
 
 
@@ -1099,22 +1086,10 @@ def update_designated_ts(
     )
     # Spark cannot overwrite partitions it is concurrently reading:
     # materialize the rewritten slice first (day-sized by contract).
-    materialized = to_stored_names(
-        updated.localCheckpoint(eager=True), meta
+    _write_days(
+        to_stored_names(updated.localCheckpoint(eager=True), meta),
+        path, ts_col, "replace_days",
     )
-    saved = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            materialized.sortWithinPartitions(pcol, ts_col)
-            .write.mode("overwrite")
-            .partitionBy(pcol)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
     return sorted(str(d) for d in dates)
 
 
@@ -1170,7 +1145,10 @@ def show_partitions(spark: SparkSession, path: str, ts_col: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
+    from questdb_etl_jobs_spark.sources.fs import (
+        hadoop_path_exists,
+        holds_no_parquet,
+    )
 
     pcol = ts_col + PARTITION_SUFFIX
     schema = (
@@ -1197,15 +1175,11 @@ def show_partitions(spark: SparkSession, path: str, ts_col: str) -> DataFrame:
     try:
         days = per_day(spark.read.parquet(path), True)
     except Exception as exc:
-        # Every partition dropped (dir of stray markers, zero footers) is
-        # an empty live listing; real read errors re-raise (the
-        # _ddl_ts_col contract).
-        if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "PATH_NOT_FOUND" in str(
-            exc
-        ):
-            days = None
-        else:
+        # Every partition dropped is an empty live listing; real read
+        # errors re-raise.
+        if not holds_no_parquet(exc):
             raise
+        days = None
     if list_detached_partitions(spark, path, ts_col):
         # basePath keeps the <pcol>=… directory parsing while reading
         # under the hidden subdir Spark's live listing ignores.

@@ -1,4 +1,4 @@
-"""Filesystem existence probe through Spark's Hadoop FileSystem layer.
+"""Filesystem probes through Spark's Hadoop FileSystem layer.
 
 Incremental writers (materialized views, designated-ts upsert) need to
 distinguish "target does not exist yet → initialize" from "target exists
@@ -23,3 +23,14 @@ def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(hpath))
+
+
+def holds_no_parquet(exc: Exception) -> bool:
+    """True iff ``exc``, raised by a parquet read, means the path read
+    holds no parquet files: it vanished, or it is a directory of stray
+    markers with no footer to infer a schema from (every partition
+    dropped). Readers answer that as an empty table. Any other error
+    (storage, permissions, a corrupt footer) is False and must
+    propagate."""
+    msg = str(exc)
+    return "UNABLE_TO_INFER_SCHEMA" in msg or "PATH_NOT_FOUND" in msg

@@ -3642,11 +3642,18 @@ def _ddl_insert_land(
 
 def _parquet_has_footers(spark: SparkSession, path: str) -> bool:
     """True when ``path`` holds at least one readable parquet footer
-    (schema-only probe; a missing/empty dir reads as False)."""
+    (schema-only probe). A missing dir, or one holding no parquet files,
+    reads as False; any other read error (a corrupt footer, storage)
+    raises — read as "no rows", it would let an INSERT skip dedup and a
+    CREATE TABLE claim an existing table's directory."""
+    from questdb_etl_jobs_spark.sources.fs import holds_no_parquet
+
     try:
         return bool(spark.read.parquet(path).columns)
-    except Exception:
-        return False
+    except Exception as exc:
+        if holds_no_parquet(exc):
+            return False
+        raise
 
 
 def _ddl_declared_schema(
@@ -3730,7 +3737,10 @@ def _ddl_ts_col(
     retention statement that could not inspect its target surfaces the
     error instead of reporting a successful no-op."""
     from questdb_etl_jobs_spark.plans.designated import infer_designated_ts
-    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
+    from questdb_etl_jobs_spark.sources.fs import (
+        hadoop_path_exists,
+        holds_no_parquet,
+    )
 
     if name in designated:
         return designated[name]
@@ -3749,9 +3759,7 @@ def _ddl_ts_col(
         # An existing dir holding zero parquet footers (all partitions
         # dropped, stray markers left) is the same empty-table no-op;
         # everything else is a real error.
-        if "PATH_NOT_FOUND" in str(exc) or "UNABLE_TO_INFER_SCHEMA" in str(
-            exc
-        ):
+        if holds_no_parquet(exc):
             return None
         raise
     ts = infer_designated_ts(columns)
@@ -5131,7 +5139,10 @@ def questdb_show(
         )
     m = _SHOW_COLUMNS_RE.match(text)
     if m:
-        from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
+        from questdb_etl_jobs_spark.sources.fs import (
+            hadoop_path_exists,
+            holds_no_parquet,
+        )
 
         name, path = _ddl_table_path(m.group("table"), tables)
         if not hadoop_path_exists(spark, path):
@@ -5170,9 +5181,7 @@ def questdb_show(
             # missing-table branch returns — the docstring's tolerance
             # contract covers both catalog faces. Real read errors
             # re-raise (the _ddl_ts_col convention).
-            if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "PATH_NOT_FOUND" in str(
-                exc
-            ):
+            if holds_no_parquet(exc):
                 return spark.createDataFrame(
                     [],
                     "column_name string, column_type string, "

@@ -8,11 +8,13 @@ recomputing history. Spark-first realization:
            → foreachBatch: DYNAMIC partition overwrite of ONLY the hour
              partitions present in the micro-batch
 
-Dynamic partition overwrite (``spark.sql.sources.partitionOverwriteMode=
-dynamic``) is what makes maintenance incremental at 100 TB: a micro-batch
-touching 2 hours rewrites 2 small directories, never the table. Readers
-see complete hours atomically per partition; time-range queries prune on
-the bucket partition column like any designated-ts table.
+Dynamic partition overwrite (the writer option ``partitionOverwriteMode=
+dynamic``, set on each batch's write and never on the session, which the
+stream thread shares with every other writer) is what makes maintenance
+incremental at 100 TB: a micro-batch touching 2 hours rewrites 2 small
+directories, never the table. Readers see complete hours atomically per
+partition; time-range queries prune on the bucket partition column like
+any designated-ts table.
 """
 
 from __future__ import annotations
@@ -59,17 +61,12 @@ def maintain_hourly_rollup(
     )
 
     def overwrite_buckets(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch.write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(rollup_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            batch.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(BUCKET_COL)
+            .parquet(rollup_path)
+        )
 
     writer = (
         windowed.writeStream.foreachBatch(overwrite_buckets)

@@ -2055,6 +2055,71 @@ def test_create_table_dedup_upsert_keys_contract(spark, tmp_path):
         )
 
 
+def test_corrupt_footer_is_not_an_empty_table(spark, tmp_path):
+    """A dedup table whose only part file has a corrupt footer is not an
+    empty table: the INSERT raises instead of appending without dedup,
+    and a column-list CREATE over the directory raises instead of
+    claiming it. A directory holding no parquet files stays empty."""
+    import os
+
+    from questdb_etl_jobs_spark.plans.designated import (
+        TABLE_META_FILE,
+        read_table_meta,
+    )
+    from questdb_etl_jobs_spark.sql.dialect import questdb_ddl
+
+    tables = {"t": str(tmp_path / "t"), "u": str(tmp_path / "u")}
+
+    def corrupt_dedup_table(name):
+        questdb_ddl(
+            spark,
+            f"CREATE TABLE {name}(sym SYMBOL, v INT, ts TIMESTAMP) "
+            "TIMESTAMP(ts) DEDUP UPSERT KEYS(ts, sym)",
+            tables,
+        )
+        questdb_ddl(
+            spark,
+            f"INSERT INTO {name}(sym, v, ts) VALUES "
+            "('a', 1, TIMESTAMP '2024-01-01 00:00:00')",
+            tables,
+        )
+        parts = list((tmp_path / name).glob("ts_pdate=*/*.parquet"))
+        assert len(parts) == 1
+        parts[0].write_bytes(b"not a parquet file")
+        # Drop the checksum sidecar so the read fails on the footer.
+        (parts[0].parent / f".{parts[0].name}.crc").unlink()
+        return parts
+
+    parts = corrupt_dedup_table("t")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        questdb_ddl(
+            spark,
+            "INSERT INTO t(sym, v, ts) VALUES "
+            "('a', 2, TIMESTAMP '2024-01-01 00:00:00')",
+            tables,
+        )
+    assert list((tmp_path / "t").glob("ts_pdate=*/*.parquet")) == parts
+
+    corrupt_dedup_table("u")
+    os.remove(tmp_path / "u" / TABLE_META_FILE)
+    with pytest.raises(Exception, match="not a Parquet file"):
+        questdb_ddl(
+            spark,
+            "CREATE TABLE u(sym SYMBOL, v INT, ts TIMESTAMP) TIMESTAMP(ts)",
+            tables,
+        )
+    assert read_table_meta(spark, tables["u"]) is None
+
+    # No parquet files at all (every partition dropped) is still empty.
+    os.remove(parts[0])
+    os.remove(tmp_path / "t" / TABLE_META_FILE)
+    assert questdb_ddl(
+        spark,
+        "CREATE TABLE t(sym SYMBOL, v INT, ts TIMESTAMP) TIMESTAMP(ts)",
+        tables,
+    ) == []
+
+
 def test_alter_drop_column_and_dedup_toggle_guards(spark, tmp_path):
     """DROP COLUMN refuses the designated timestamp and declared dedup
     keys; DEDUP ENABLE validates its key list like CREATE; DISABLE

@@ -1822,7 +1822,8 @@ def test_sign_project_preserves_distances(spark):
 def test_matview_refresh_handles_late_data(spark, tmp_path):
     """Partials are arrival-order-independent: a late batch overlapping
     already-refreshed days merges to exactly the direct recompute,
-    including first/last pairs and decimal sums."""
+    including first/last pairs and decimal sums, and keeps the day it
+    does not touch."""
     from questdb_etl_jobs_spark.operators.matview import (
         read_sample_by_view,
         refresh_sample_by_view,
@@ -1844,6 +1845,12 @@ def test_matview_refresh_handles_late_data(spark, tmp_path):
         (F.col("ts") < "2024-01-02") | (F.col("ts") >= "2024-01-02 05:00:00")
     ).filter(F.col("ts").substr(18, 2) != "07")
     late = df.exceptAll(on_time)
+    # Day 3 arrives only on time: the late refresh must leave it alone.
+    day3 = spark.createDataFrame(
+        [(_ts("2024-01-03 01:00:00"), "t", 301.0)],
+        "ts timestamp, k string, v double",
+    )
+    on_time, df = on_time.unionByName(day3), df.unionByName(day3)
     refresh_sample_by_view(spark, on_time, path, "ts", "day", "v", ["k"])
     refresh_sample_by_view(spark, late, path, "ts", "day", "v", ["k"])
     got = sorted(
@@ -1863,7 +1870,7 @@ def test_matview_refresh_handles_late_data(spark, tmp_path):
             ).collect(),
         )
     )
-    assert got == expected and len(got) == 2  # one row per day
+    assert got == expected and len(got) == 3  # one row per day
 
 
 def test_matview_exactly_once_replay_bit_identical(spark, tmp_path):

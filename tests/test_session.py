@@ -139,3 +139,28 @@ def test_local_fs_confs_only_when_a_local_master_starts_the_jvm(
         assert session._local_fs_confs(master) == {}, master
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
     assert session._local_fs_confs("local[2]") == {}
+
+
+def test_only_session_module_sets_session_confs():
+    """Session confs are shared by every thread of the session, so the
+    package sets them only in ``session.py``; a write that needs another
+    behaviour passes it as an option of its own writer."""
+    import ast
+    from pathlib import Path
+
+    root = Path(session.__file__).resolve().parent
+    offenders = []
+    for module in sorted(root.rglob("*.py")):
+        if module.name == "session.py" and module.parent == root:
+            continue
+        for node in ast.walk(ast.parse(module.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("set", "unset")
+                and isinstance(node.value, ast.Attribute)
+                and node.value.attr == "conf"
+            ):
+                offenders.append(
+                    f"{module.relative_to(root)}:{node.lineno}"
+                )
+    assert offenders == []

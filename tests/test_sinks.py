@@ -423,6 +423,128 @@ def test_upsert_designated_ts_merge_semantics(spark, tmp_path):
     assert again == got
 
 
+def _upsert_fixture(spark, path, sym):
+    """A three-day designated table at ``path`` and a batch touching
+    only its first two days (day 3 must survive every upsert)."""
+    from questdb_etl_jobs_spark.plans.designated import write_designated_ts
+
+    def ts(d, h):
+        return datetime(2024, 1, d, h, 0, 0)
+
+    write_designated_ts(
+        spark.createDataFrame(
+            [(sym, ts(1, 10), 1.0), (sym, ts(2, 10), 2.0),
+             (sym, ts(3, 10), 3.0)],
+            "sym string, ts timestamp, px double",
+        ),
+        path,
+        "ts",
+    )
+    return spark.createDataFrame(
+        [(sym, ts(1, 10), 10.0), (sym + "2", ts(2, 11), 20.0)],
+        "sym string, ts timestamp, px double",
+    )
+
+
+def _table_rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+
+def test_concurrent_upserts_match_sequential(spark, tmp_path):
+    """Two threads upserting different tables at once in one session
+    each end with the table a sequential run gives, untouched day
+    included — neither write borrows the other's overwrite mode."""
+    import threading
+
+    from questdb_etl_jobs_spark.plans.designated import upsert_designated_ts
+
+    expected = {}
+    for sym in ("a", "b"):
+        path = str(tmp_path / f"seq_{sym}")
+        upsert_designated_ts(
+            spark, _upsert_fixture(spark, path, sym), path, "ts", ["sym"]
+        )
+        expected[sym] = _table_rows(spark, path)
+    assert all(len(rows) == 4 for rows in expected.values())
+
+    batches = {
+        sym: _upsert_fixture(spark, str(tmp_path / f"par_{sym}"), sym)
+        for sym in ("a", "b")
+    }
+    start = threading.Barrier(2)
+    errors = []
+
+    def run(sym):
+        try:
+            start.wait(30)
+            path = str(tmp_path / f"par_{sym}")
+            upsert_designated_ts(spark, batches[sym], path, "ts", ["sym"])
+        except Exception as exc:  # surfaced on the main thread
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run, args=(s,)) for s in batches]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert not any(t.is_alive() for t in threads) and not errors
+    for sym in batches:
+        assert _table_rows(spark, str(tmp_path / f"par_{sym}")) == expected[sym]
+    assert spark.conf.get(
+        "spark.sql.sources.partitionOverwriteMode"
+    ).lower() != "dynamic"
+
+
+def test_upsert_write_leaves_session_overwrite_mode_alone(
+    spark, tmp_path, monkeypatch
+):
+    """While an upsert is inside its partition overwrite, another
+    thread's view of the session still reads a static overwrite mode:
+    dynamic overwrite is an option of the upsert's own writer."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from questdb_etl_jobs_spark.plans.designated import upsert_designated_ts
+
+    path = str(tmp_path / "t")
+    batch = _upsert_fixture(spark, path, "a")
+    entered, release = threading.Event(), threading.Event()
+
+    def held(real):
+        def write(self, *args, **kwargs):
+            if (args[0] if args else kwargs.get("path")) == path:
+                entered.set()
+                release.wait(120)
+            return real(self, *args, **kwargs)
+
+        return write
+
+    monkeypatch.setattr(DataFrameWriter, "save", held(DataFrameWriter.save))
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", held(DataFrameWriter.parquet)
+    )
+    errors = []
+
+    def run():
+        try:
+            upsert_designated_ts(spark, batch, path, "ts", ["sym"])
+        except Exception as exc:  # surfaced on the main thread
+            errors.append(exc)
+
+    t = threading.Thread(target=run)
+    t.start()
+    try:
+        assert entered.wait(120)
+        mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    finally:
+        release.set()
+        t.join(300)
+    assert not t.is_alive() and not errors
+    assert mode.lower() != "dynamic"
+    assert len(_table_rows(spark, path)) == 4  # day 3 survived
+
+
 def test_jdbc_sink_executes_against_embedded_derby(spark):
     """Round-9 verdict task #3: the JDBC sink path had never EXECUTED
     (no driver jar / DB in the sandbox). Spark's own distribution ships
