@@ -29,7 +29,8 @@ is then at most k× one partition's rows, and the operator falls back to
 the plain single-pass top-k (still exact, trivially sized). The fallback
 is decided from the physical plan, with no job, when the input is one
 file scan under narrow operators only (project, filter): the scan's
-split count is its partition count. Any other plan (an exchange, a
+split count is its partition count, or a coalesce's count when one sits
+on that path. Any other plan (an exchange, a
 join, a union, an in-memory or local relation) runs step 1 to find out.
 
 Determinism: the total order is ``(value_col DESC, *tiebreak)``; pass 1
@@ -123,14 +124,18 @@ def _planned_partitions(df: DataFrame) -> int | None:
     plan without running a job, or None when the plan cannot say.
 
     Known only for one file scan under narrow operators: planning the
-    scan's splits lists files on the driver. Anything else (an exchange,
-    whose partition count AQE may change at run time, a join, a union, a
-    cached or local relation) gives None."""
+    scan's splits lists files on the driver. A coalesce on that path
+    (a small table the dialect reads as one partition) states its own
+    count, an upper bound on the partitions it computes. Anything else
+    (an exchange, whose partition count AQE may change at run time, a
+    join, a union, a cached or local relation) gives None."""
     node = df._jdf.queryExecution().executedPlan()
     while True:
         name = node.getClass().getSimpleName()
         if name == "FileSourceScanExec":
             return int(node.inputRDD().getNumPartitions())
+        if name == "CoalesceExec":
+            return int(node.numPartitions())
         if name not in _NARROW_EXECS:
             return None
         node = node.children().apply(0)

@@ -1985,6 +1985,41 @@ def _agg_column(fn: str, arg: str, alias: str, ts: str) -> Column:
     return col.alias(alias)
 
 
+#: Logical nodes a registered table may sit under and still read as one
+#: file relation: the view's alias and wrapper, a projection (a declared
+#: schema's renames), a filter.
+_TABLE_WRAPPERS = frozenset({"SubqueryAlias", "View", "Project", "Filter"})
+
+
+def _read_table(spark: SparkSession, name: str) -> DataFrame:
+    """``spark.table(name)``, read as ONE partition when the table is one
+    file relation no larger than ``spark.sql.files.openCostInBytes``.
+
+    Below that size Spark itself prices one more file open as dearer than
+    reading the whole table, so the many small splits of an hourly-append
+    table cost more in tasks than they save in parallelism. One partition
+    reports ``SinglePartition``: sort, aggregate, window and the ASOF
+    union then need no exchange, and a dashboard query runs as one job
+    with one task. Catalyst pushes the WHERE through the coalesce, so
+    partition pruning and pushed filters are unchanged. The gate reads
+    the relation's file-size sum, which its file index already holds: no
+    planning and no file listing. Any other frame (a merged-delta view, a
+    local relation, a larger table) is returned untouched, with its
+    plan as before."""
+    df = spark.table(name)
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() in _TABLE_WRAPPERS:
+        node = node.children().apply(0)
+    if node.nodeName() != "LogicalRelation":
+        return df
+    rel = node.relation()
+    if rel.getClass().getSimpleName() != "HadoopFsRelation":
+        return df
+    if rel.sizeInBytes() > spark._jconf.filesOpenCostInBytes():
+        return df
+    return df.coalesce(1)
+
+
 def questdb_sql(
     spark: SparkSession,
     sql: str,
@@ -1999,18 +2034,14 @@ def questdb_sql(
     this in table metadata). Standard-SQL queries pass straight through
     to ``spark.sql``.
 
-    **Eager work at call time.** Most shapes only build a plan; two
-    run a Spark job when this function is called:
-
-    - Scan-bound ``ORDER BY … LIMIT k`` shapes plan through the
-      certified threshold prune, which runs ONE small job (a
-      per-partition extrema pass in ``topk_by_threshold``) to certify
-      the prune threshold — unless the input's physical plan already
-      shows fewer than k partitions (one file scan under narrow
-      operators), where no bound can certify and no job runs.
-    - ``SAMPLE BY … FILL`` checkpoints its aggregate
-      (``sample_by.fill_gaps``); under AQE that runs the aggregate's
-      shuffle-map job at call time.
+    **Eager work at call time.** Every shape only builds a plan, except
+    one: scan-bound ``ORDER BY … LIMIT k`` shapes plan through the
+    certified threshold prune, which runs ONE small job (a per-partition
+    extrema pass in ``topk_by_threshold``) to certify the prune threshold
+    — unless the input's physical plan already shows fewer than k
+    partitions (one file scan under narrow operators, or a table read as
+    one partition by :func:`_read_table`), where no bound can certify
+    and no job runs.
 
     The threshold literal is frozen against the table's data as of this
     call; if the underlying files change between building the DataFrame
@@ -2549,7 +2580,7 @@ def questdb_sql(
             gs_start, gs_end + (1 if gs_step > 0 else -1), gs_step
         ).select(F.col("id").alias("generate_series"))
     else:
-        df = spark.table(table)
+        df = _read_table(spark, table)
     if table_alias:
         df = df.alias(table_alias)
     # timestamp_sequence(start, step_us): row x's timestamp is
@@ -2598,7 +2629,7 @@ def questdb_sql(
             join_m.group("keys"),
         )
         tolerance = join_m.group("tolq") or join_m.group("tol")
-        right = spark.table(right_name)
+        right = _read_table(spark, right_name)
         r_ts = designated.get(right_name) or infer_designated_ts(right.columns)
         if ts is None or r_ts is None:
             raise QuestDBSQLError(
@@ -3179,10 +3210,10 @@ def questdb_sql(
     # CONTRACT: the route's threshold pass runs a Spark job AT CALL
     # TIME (a bounded k-row collect — a driver-side plan decision, never
     # data-sized), except where the plan shows fewer scan partitions
-    # than k (no bound can certify; no job). SAMPLE BY FILL's aggregate
-    # checkpoint runs one job at call time too (under AQE).
-    # questdb_sql therefore validates the ENTIRE query before lowering
-    # (see the fragment check above), so a rejected query never
+    # than k (no bound can certify; no job). It is the only shape that
+    # runs a job at call time. questdb_sql therefore validates the
+    # ENTIRE query before lowering (see the fragment check above), so a
+    # rejected query never
     # triggers a job; callers composing questdb_sql lazily inside
     # pipelines should know the returned DataFrame's threshold literal
     # is fixed at build time.

@@ -5383,36 +5383,81 @@ def _call_time_jobs(spark, build):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+_DAY = "WHERE purchase_date IN '2024-01-02'"
+_COLS = "buyer, item_id, quantity, price, purchase_date"
+
+#: The five dashboard shapes over the dashboard tables.
+_DASH_SHAPES = {
+    "interval": f"SELECT {_COLS} FROM __dash_purchases {_DAY} "
+                "ORDER BY purchase_date",
+    "sample_by_fill": "SELECT purchase_date, count() n, sum(quantity) qty "
+                      f"FROM __dash_purchases {_DAY} AND item_id = 3 "
+                      "SAMPLE BY 1h FILL(0)",
+    "latest_on": f"SELECT {_COLS} FROM __dash_purchases {_DAY} "
+                 "LATEST ON purchase_date PARTITION BY buyer",
+    "asof_join": "SELECT purchase_date, buyer, item_id, quantity, "
+                 "list_price FROM __dash_purchases ASOF JOIN "
+                 f"__dash_prices ON item_id {_DAY}",
+    # One file per day: far fewer scan partitions than k = 25.
+    "topk": f"SELECT {_COLS} FROM __dash_purchases {_DAY} "
+            "ORDER BY price DESC, purchase_date LIMIT 25",
+}
+
+
 def test_dashboard_shapes_call_time_jobs(spark, dash_tables):
-    """Building each dashboard query starts no Spark job, except SAMPLE
-    BY FILL: its aggregate's lazy localCheckpoint plans the adaptive
-    query, which runs the aggregate's shuffle-map job when the query is
-    built."""
-    day = "WHERE purchase_date IN '2024-01-02'"
-    cols = "buyer, item_id, quantity, price, purchase_date"
-    shapes = {
-        "interval": (f"SELECT {cols} FROM __dash_purchases {day} "
-                     "ORDER BY purchase_date", 0),
-        "sample_by_fill": ("SELECT purchase_date, count() n, "
-                           "sum(quantity) qty FROM __dash_purchases "
-                           f"{day} AND item_id = 3 SAMPLE BY 1h FILL(0)", 1),
-        "latest_on": (f"SELECT {cols} FROM __dash_purchases {day} "
-                      "LATEST ON purchase_date PARTITION BY buyer", 0),
-        "asof_join": ("SELECT purchase_date, buyer, item_id, quantity, "
-                      "list_price FROM __dash_purchases ASOF JOIN "
-                      f"__dash_prices ON item_id {day}", 0),
-        # One file per day: far fewer scan partitions than k = 25.
-        "topk": (f"SELECT {cols} FROM __dash_purchases {day} "
-                 "ORDER BY price DESC, purchase_date LIMIT 25", 0),
-    }
+    """Building a dashboard query starts no Spark job: SAMPLE BY FILL
+    densifies without a checkpoint, and the top-k route reads the
+    partition count from the plan."""
     got = {}
-    for name, (sql, _) in shapes.items():
+    for name, sql in _DASH_SHAPES.items():
         df, jobs = _call_time_jobs(
             spark, lambda sql=sql: questdb_sql(spark, sql, _DASH)
         )
         assert df.count() > 0, name
         got[name] = jobs
-    assert got == {name: jobs for name, (_, jobs) in shapes.items()}
+    assert got == dict.fromkeys(_DASH_SHAPES, 0)
+
+
+def _exchanges(df) -> list[str]:
+    """The exchanges of ``df``'s physical plan, before it runs."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"(?:Broadcast)?Exchange(?: \w+)?", plan)
+
+
+def test_dashboard_shapes_run_one_job(spark, dash_tables):
+    """Each dashboard shape, built and fetched, runs one job and no
+    exchange: tables no larger than one file open read as one partition,
+    and the WHERE still prunes the day partitions under the coalesce.
+    With ``spark.sql.files.openCostInBytes`` below the tables' size the
+    reads are left alone, and the plans keep their exchanges."""
+    for name, sql in _DASH_SHAPES.items():
+        rows, jobs = _call_time_jobs(
+            spark, lambda sql=sql: questdb_sql(spark, sql, _DASH).collect()
+        )
+        assert rows and jobs == 1, (name, jobs)
+        df = questdb_sql(spark, sql, _DASH)
+        assert _exchanges(df) == [], name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Coalesce 1" in plan, name
+        assert "PartitionFilters: [isnotnull(purchase_date_pdate" in plan, name
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        got = {
+            name: _exchanges(questdb_sql(spark, sql, _DASH))
+            for name, sql in _DASH_SHAPES.items()
+        }
+    finally:
+        spark.conf.set(key, old)
+    assert got == {
+        "interval": ["Exchange rangepartitioning"],
+        "sample_by_fill": ["Exchange SinglePartition",
+                           "Exchange hashpartitioning"],
+        "latest_on": ["Exchange hashpartitioning"],
+        "asof_join": ["Exchange hashpartitioning"],
+        "topk": [],
+    }
 
 
 def test_topk_route_below_k_partitions_runs_no_job(spark, dash_tables):
@@ -5441,15 +5486,10 @@ def test_topk_route_below_k_partitions_runs_no_job(spark, dash_tables):
     assert one.collect() == plain.limit(1).collect()
 
 
-def test_asof_route_builds_in_few_py4j_calls(spark, dash_tables, monkeypatch):
-    """The ASOF lowering passes SQL strings for the JVM to parse, so the
-    dashboard's ASOF query builds in a bounded number of py4j round
-    trips, whatever the column count."""
+def _round_trips(spark, monkeypatch, sql) -> int:
+    """The py4j round trips of one warm ``questdb_sql`` call."""
     from py4j.protocol import MEMORY_COMMAND_NAME
 
-    sql = ("SELECT purchase_date, buyer, item_id, quantity, list_price "
-           "FROM __dash_purchases ASOF JOIN __dash_prices ON item_id "
-           "WHERE purchase_date IN '2024-01-02'")
     questdb_sql(spark, sql, _DASH)
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
@@ -5465,7 +5505,58 @@ def test_asof_route_builds_in_few_py4j_calls(spark, dash_tables, monkeypatch):
     monkeypatch.setattr(client, "send_command", counting)
     questdb_sql(spark, sql, _DASH)
     monkeypatch.undo()
-    assert len(calls) <= 150, len(calls)
+    return len(calls)
+
+
+def test_asof_route_builds_in_few_py4j_calls(spark, dash_tables, monkeypatch):
+    """The ASOF lowering passes SQL strings for the JVM to parse, so the
+    dashboard's ASOF query builds in a bounded number of py4j round
+    trips, whatever the column count."""
+    calls = _round_trips(spark, monkeypatch, _DASH_SHAPES["asof_join"])
+    assert calls <= 150, calls
+
+
+def test_sample_by_fill_route_builds_in_few_py4j_calls(
+    spark, dash_tables, monkeypatch
+):
+    """``fill_gaps`` builds its densify and fills from SQL strings, so the
+    dashboard's SAMPLE BY FILL query builds in a bounded number of py4j
+    round trips."""
+    calls = _round_trips(spark, monkeypatch, _DASH_SHAPES["sample_by_fill"])
+    assert calls <= 200, calls
+
+
+def test_sample_by_fill_keeps_null_group_key(spark):
+    """SAMPLE BY FILL keeps the aggregates of a NULL group key: the NULL
+    key is a group like any other, filled or not."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    spark.createDataFrame(
+        [
+            (t0 + dt.timedelta(minutes=10), None, 5),
+            (t0 + dt.timedelta(hours=1), "a", 1),
+            (t0 + dt.timedelta(hours=2, minutes=20), None, 7),
+        ],
+        "ts timestamp, sym string, v long",
+    ).createOrReplaceTempView("__nk")
+    d = {"__nk": "ts"}
+
+    def sums(fill):
+        sql = f"SELECT ts, sym, sum(v) s FROM __nk SAMPLE BY 1h {fill}"
+        return {
+            (r.sym, r.ts.hour): r.s for r in questdb_sql(spark, sql, d).collect()
+        }
+
+    assert sums("") == {(None, 0): 5, ("a", 1): 1, (None, 2): 7}
+    assert sums("FILL(0)") == {
+        (None, 0): 5, (None, 1): 0, (None, 2): 7,
+        ("a", 0): 0, ("a", 1): 1, ("a", 2): 0,
+    }
+    assert sums("FILL(PREV)") == {
+        (None, 0): 5, (None, 1): 5, (None, 2): 7,
+        ("a", 0): None, ("a", 1): 1, ("a", 2): 1,
+    }
 
 
 @pytest.fixture(scope="module")

@@ -706,6 +706,85 @@ def test_fill_gaps_modes(spark):
     assert rows[("b", 4)] == (0, 5.0, None)
 
 
+def _fill_case(spark, rows, keyed, bounds=None):
+    """``fill_gaps`` over an hourly aggregate with columns n (FILL 0),
+    p (PREV), lin (LINEAR) and raw (NULL), as {(key, hour): values}."""
+    from questdb_etl_jobs_spark.operators.sample_by import fill_gaps
+
+    agg = spark.createDataFrame(
+        [(None if h is None else _ts(f"2024-01-01T{h:02d}:00:00"), k, n, v)
+         for h, k, n, v in rows],
+        "bucket_ts timestamp, k string, n long, v double",
+    ).selectExpr("bucket_ts", "k", "n", "v AS p", "v AS lin", "v AS raw")
+    if not keyed:
+        agg = agg.drop("k")
+    lo_us, hi_us = (
+        [int(_ts(f"2024-01-01T{h:02d}:00:00").timestamp()) * 10**6
+         for h in bounds]
+        if bounds else (None, None)
+    )
+    out = fill_gaps(
+        agg, "bucket_ts", "hour", keys=["k"] if keyed else None,
+        fill={"n": ("value", 0.0), "p": "prev", "lin": "linear",
+              "raw": "null"},
+        lo_us=lo_us, hi_us=hi_us,
+    )
+    assert out.columns == agg.columns
+    assert dict(out.dtypes)["n"] == "bigint"
+    return {
+        (r["k"] if keyed else None, r["bucket_ts"].hour):
+            (r["n"], r["p"], r["lin"], r["raw"])
+        for r in out.collect()
+    }
+
+
+def test_fill_gaps_cases_by_hand(spark):
+    """``fill_gaps`` densifies in one pass: NULL, value, PREV and LINEAR
+    fills, with and without keys (a NULL key is a group of its own),
+    over FROM-TO bounds, over an empty aggregate, and with a NULL-bucket
+    row, which is dropped."""
+    series = [(1, "a", 2, 10.0), (4, "a", 4, 40.0), (None, "a", 9, 99.0)]
+    a = {
+        1: (2, 10.0, 10.0, 10.0),
+        2: (0, 10.0, 20.0, None),
+        3: (0, 10.0, 30.0, None),
+        4: (4, 40.0, 40.0, 40.0),
+    }
+    keyed = series + [(2, "b", 1, 5.0), (3, None, 3, 6.0)]
+    assert _fill_case(spark, keyed, True) == {
+        **{("a", h): v for h, v in a.items()},
+        ("b", 1): (0, None, None, None),
+        ("b", 2): (1, 5.0, 5.0, 5.0),
+        ("b", 3): (0, 5.0, None, None),
+        ("b", 4): (0, 5.0, None, None),
+        (None, 1): (0, None, None, None),
+        (None, 2): (0, None, None, None),
+        (None, 3): (3, 6.0, 6.0, 6.0),
+        (None, 4): (0, 6.0, None, None),
+    }
+    no_keys = [(h, None, n, v) for h, _, n, v in series]
+    assert _fill_case(spark, no_keys, False) == {
+        (None, h): v for h, v in a.items()
+    }
+    # FROM-TO: the grid is the given range, empty edges included.
+    assert _fill_case(spark, no_keys, False, bounds=(0, 5)) == {
+        (None, 0): (0, None, None, None),
+        **{(None, h): v for h, v in a.items()},
+        (None, 5): (0, 40.0, None, None),
+    }
+    assert _fill_case(spark, series, True, bounds=(2, 3)) == {
+        ("a", 2): (0, None, None, None),
+        ("a", 3): (0, None, None, None),
+    }
+    # An empty aggregate: no rows, except over a FROM-TO range without keys.
+    assert _fill_case(spark, [], False) == {}
+    assert _fill_case(spark, [], True) == {}
+    assert _fill_case(spark, [], False, bounds=(1, 2)) == {
+        (None, 1): (0, None, None, None),
+        (None, 2): (0, None, None, None),
+    }
+
+
 def test_dup_clusters_transitive_chain(spark):
     """A~B, B~C, D~E merges {A,B,C} via transitivity even with no A~C
     edge; min node id wins as the cluster label."""

@@ -24,7 +24,7 @@ HEADLINE: dict[str, str] = {
     "q30_rank_top3_orders": "one hash exchange feeds both window specs",
     "q34_topk_lineitems": "TakeOrderedAndProject — no global sort",
     "q16_asof_join": "union + single window: one shuffle total",
-    "q66_sample_by_fill": "fill runs on the persisted aggregate: ONE scan of the raw table",
+    "q66_sample_by_fill": "one pass: a per-key map aggregate densified by explode — no grid join, no checkpoint",
     "q47_near_dup_minhash_lsh": "no self-join of the signature pipeline; banding via aggregate",
     "q69_sequence_packing": "one exchange (shard hash) for the packing window",
     "q68_stratified_sample": "sampling is a scan-level filter — zero pre-agg exchanges",
