@@ -80,16 +80,6 @@ def shingled(
     return with_toks.select(F.col(id_col), grams.alias(out_col))
 
 
-def shingle_rows(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """(id, __shingle) exploded distinct-shingle rows (barrier inside)."""
-    sets_ = shingled(df, id_col, text_col, n)
-    return sets_.select(
-        F.col(id_col), F.explode(F.col("__sh")).alias("__shingle")
-    )
-
-
 def hashed_shingled(
     df: DataFrame, id_col: str, text_col: str, n: int = 3,
     out_col: str = "__sh",
@@ -193,38 +183,6 @@ def _signature_agg_expr(n_hashes: int):
                 f"min(xxhash64(__hs, {i}))" for i in range(n_hashes)
             )
         )
-    )
-
-
-def minhash_signature(
-    df: DataFrame, id_col: str, text_col: str, n_hashes: int = 32, shingle_words: int = 3
-) -> DataFrame:
-    """(id, signature array<long>[n_hashes]) per document.
-
-    Permutation *i* is simulated by re-mixing the 8-byte hashed shingle
-    (:func:`hashed_shingled` identity): ``xxhash64(hs, i)``; the
-    signature element is the min over the document's distinct shingles.
-    The variable-length token window is hashed exactly once per shingle —
-    the n_hashes family re-mixes the resulting long (XXH64's long path, a
-    handful of multiply-rotate ops), which is ~2× cheaper than hashing a
-    shingle string n_hashes times and has the same independence/recall
-    properties (any avalanche-mixing family over distinct base hashes
-    works; base-hash collisions merely merge two shingles, exactly as a
-    MinHash permutation over hashed shingles always does).
-
-    Plan: explode hashed shingles → hash-aggregate with n_hashes ``min``
-    columns. The explode is deliberate: it materializes the
-    (quadratic-to-build, array_distinct) shingle set ONCE — a pure
-    ``array_min(transform(...))`` fold per hash re-inlines the shingle
-    construction n_hashes× because lambda expressions are excluded from
-    codegen subexpression elimination (measured 10× slower end-to-end).
-    The shuffle stays cheap at scale: partial aggregation collapses each
-    document's shingle rows map-side, so ~1 row per doc crosses the
-    wire, not one per shingle.
-    """
-    exploded = hashed_shingle_rows(df, id_col, text_col, shingle_words)
-    return exploded.groupBy(id_col).agg(
-        _signature_agg_expr(n_hashes).alias("signature")
     )
 
 

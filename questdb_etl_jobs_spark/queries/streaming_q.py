@@ -275,54 +275,6 @@ def _replay_rows_with_ids() -> list[tuple[int, int, str, float]]:
     return out
 
 
-def _replay_expected(step) -> list[tuple[int, int, float]]:
-    """CPython recurrence trajectory: per key, per hour-file batch, rows
-    sorted by (ts, row_id) — exactly the streaming operators'
-    within-batch sort — with carried state crossing file boundaries in
-    replay order. ``step(prev_or_None, x) -> (new_state, emitted)``."""
-    state: dict[int, float] = {}
-    out = []
-    batch: list[tuple[int, int, str, float]] = []
-
-    def flush() -> None:
-        for item, rid, _ts, price in sorted(
-            batch, key=lambda r: (r[2], r[1])
-        ):
-            st, emitted = step(state.get(item), price)
-            state[item] = st
-            out.append((item, rid, emitted))
-        batch.clear()
-
-    current_hour = None
-    for item, rid, ts, price in _replay_rows_with_ids():
-        hour = ts[:13]
-        if hour != current_hour:
-            flush()
-            current_hour = hour
-        batch.append((item, rid, ts, price))
-    flush()
-    return sorted(out)
-
-
-def _replay_oracle(step, out_col: str) -> str:
-    def fmt(v: float | None) -> str:
-        return "NULL" if v is None else repr(v)
-
-    values = ",\n      ".join(
-        f"({item}, {rid}, {fmt(v)})"
-        for item, rid, v in _replay_expected(step)
-    )
-    return f"""
-    SELECT CAST(item_id AS INTEGER) AS item_id,
-           CAST(row_id AS BIGINT) AS row_id,
-           CAST({out_col} AS DOUBLE) AS {out_col}
-    FROM (VALUES
-      {values}
-    ) AS t(item_id, row_id, {out_col})
-    ORDER BY item_id, row_id
-    """
-
-
 def _run_replay_stream(spark: SparkSession, op, result_col: str,
                        out_col: str, prefix: str, raw: bool = False):
     """Replay the id-augmented hourly exports one-file-per-trigger

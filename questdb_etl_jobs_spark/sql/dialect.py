@@ -77,6 +77,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -267,9 +268,9 @@ def _normalize_string_literals(text: str) -> str:
     - an unterminated literal or identifier;
     - a zero-length identifier (``""`` outside a literal);
     - an identifier containing ``'``, ``(``, ``)`` or a backtick —
-      the downstream quote-/paren-aware scanners walk single-quote
-      and paren structure and such bodies would silently corrupt
-      their state;
+      every later scanner finds its positions on :func:`_mask`, whose
+      backticked identifiers end at the next backtick, and such bodies
+      would silently corrupt its spans or the paren depth read off it;
     - on dialect-marked text only, an identifier containing a clause
       keyword (``"order by totals"``) — the clause splitters would
       mis-split inside it.
@@ -376,68 +377,60 @@ def _normalize_string_literals(text: str) -> str:
     return "".join(out)
 
 
+#: Filler for the contents of quoted spans on a ``_mask``: it matches
+#: no word character, whitespace, paren, comma, quote or operator, so
+#: no keyword, call, comma or paren of a regex can land inside a quote.
+_FILL = "\0"
+#: A ``'…'`` literal (``''`` escapes) or a backticked identifier; an
+#: unterminated span runs to the end of the text.
+_QUOTED_RE = re.compile(r"'[^']*(?:''[^']*)*('?)|`[^`]*(`?)")
+_PAREN_RE = re.compile(r"[()]")
+
+
+def _mask(text: str) -> str:
+    """Same-length copy of post-normalization text with every quoted
+    span's contents blanked to ``_FILL`` and its delimiters kept. This
+    is the dialect's one rule for where literals and quoted identifiers
+    are: the splitters and rewriters find positions on the mask and
+    slice the original text by the same indices."""
+    if "'" not in text and "`" not in text:
+        return text
+
+    def blank(m: re.Match) -> str:
+        close = m.group(1) or m.group(2) or ""
+        inner = m.end() - m.start() - 1 - len(close)
+        return m.group(0)[0] + _FILL * inner + close
+
+    return _QUOTED_RE.sub(blank, text)
+
+
+def _top_level(mask: str, pattern: str) -> Iterator[re.Match]:
+    """Matches of ``pattern`` on a ``_mask`` at paren depth 0."""
+    depth, last = 0, 0
+    for m in re.finditer(pattern, mask):
+        depth += mask.count("(", last, m.start()) - mask.count(
+            ")", last, m.start()
+        )
+        last = m.start()
+        if depth == 0:
+            yield m
+
+
 def _has_window_over(text: str) -> bool:
     """True when a window ``OVER (`` appears OUTSIDE string literals /
     quoted identifiers."""
-    spans = _quoted_spans(text)
-    for m in re.finditer(r"\bOVER\s*\(", text, re.IGNORECASE):
-        if not any(s <= m.start() < e for s, e, _ in spans):
-            return True
-    return False
+    return re.search(r"\bOVER\s*\(", _mask(text), re.IGNORECASE) is not None
 
 
-def _quoted_spans(text: str) -> list[tuple[int, int, str]]:
-    """``[start, end)`` spans of single-quoted literals and backticked
-    identifiers, with their quote char. Post-normalization text: ``''``
-    escapes inside literals; identifiers never contain backticks (the
-    normalization pass refuses them), so a backtick span ends at the
-    next backtick. Shared by the table-ref rewriter and the subquery
-    splitter so literal detection can't drift between them (round-16
-    verdict watch-item)."""
-    spans: list[tuple[int, int, str]] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'" or ch == "`":
-            j = i + 1
-            while j < n:
-                if text[j] == ch:
-                    if (
-                        ch == "'"
-                        and j + 1 < n
-                        and text[j + 1] == "'"
-                    ):
-                        j += 2
-                        continue
-                    break
-                j += 1
-            spans.append((i, min(j + 1, n), ch))
-            i = j + 1
-        else:
-            i += 1
-    return spans
-
-
-def _scan_balanced(text: str, start: int) -> int | None:
-    """Index one PAST the ')' closing the '(' at ``start``; None if
-    unbalanced. Quote-aware."""
-    assert text[start] == "("
-    depth, i, n = 0, start, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = text.find("'", i + 1)
-            if j < 0:
-                return None
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
+def _scan_balanced(mask: str, start: int) -> int | None:
+    """Index one PAST the ')' closing the '(' at ``start`` of a
+    ``_mask``; None if unbalanced."""
+    assert mask[start] == "("
+    depth = 0
+    for m in _PAREN_RE.finditer(mask, start):
+        depth += 1 if m.group(0) == "(" else -1
+        if depth == 0:
+            return m.end()
     return None
 
 
@@ -448,24 +441,24 @@ def _split_ctes(text: str) -> tuple[list[tuple[str, str]], str] | None:
     m = re.match(r"^WITH\s+", text, re.IGNORECASE)
     if not m:
         return None
+    mask = _mask(text)
     i = m.end()
     ctes: list[tuple[str, str]] = []
     while True:
         nm = re.match(
-            r"\s*([A-Za-z_]\w*)\s+AS\s*\(", text[i:], re.IGNORECASE
+            r"\s*([A-Za-z_]\w*)\s+AS\s*\(", mask[i:], re.IGNORECASE
         )
         if not nm:
             return None
         open_at = i + nm.end() - 1
-        close = _scan_balanced(text, open_at)
+        close = _scan_balanced(mask, open_at)
         if close is None:
             return None
         ctes.append((nm.group(1), text[open_at + 1:close - 1].strip()))
         rest = text[close:].lstrip()
-        if rest.startswith(","):
-            i = close + text[close:].index(",") + 1
-            continue
-        return ctes, rest
+        if not rest.startswith(","):
+            return ctes, rest
+        i = len(text) - len(rest) + 1
 
 
 def _split_from_subquery(text: str) -> tuple[str, str, str] | None:
@@ -476,20 +469,18 @@ def _split_from_subquery(text: str) -> tuple[str, str, str] | None:
     QuestDB's classic two-sided as-of (``FROM (trades …) ASOF JOIN
     (quotes …)``) resolves by calling this repeatedly — each pass
     rewrites one subquery."""
-    fm = re.search(r"\b(FROM|JOIN)\s*\(", text, re.IGNORECASE)
+    mask = _mask(text)
+    fm = re.search(r"\b(FROM|JOIN)\s*\(", mask, re.IGNORECASE)
     if not fm:
-        return None
-    # Ignore a keyword inside a string literal or quoted identifier.
-    if any(s <= fm.start() < e for s, e, _ in _quoted_spans(text)):
         return None
     kw = fm.group(1).upper()
     open_at = fm.end() - 1
-    close = _scan_balanced(text, open_at)
+    close = _scan_balanced(mask, open_at)
     if close is None:
         return None
     body = text[open_at + 1:close - 1].strip()
     am = re.match(
-        r"\s*(?:AS\s+)?([A-Za-z_]\w*)", text[close:], re.IGNORECASE
+        r"\s*(?:AS\s+)?([A-Za-z_]\w*)", mask[close:], re.IGNORECASE
     )
     keywords = {
         "where", "group", "order", "limit", "sample", "latest", "join",
@@ -528,25 +519,15 @@ def _rewrite_table_ref(text: str, name: str, new: str) -> str:
     rewrites when the whole identifier IS the name; a match that is
     merely a substring of a larger backticked identifier
     (```name stats```) is left alone."""
-    spans = _quoted_spans(text)
-    pat = re.compile(
-        rf"`{re.escape(name)}`|(?<![\w.]){re.escape(name)}\b"
+    mask = _mask(text)
+    n = re.escape(name)
+    pat = re.compile(rf"(?:`{n}`|(?<![\w.]){n}\b)(?!\s*\()")
+    # A bare name inside quotes starts on a blanked character; a whole
+    # backticked `name` starts on its kept delimiter.
+    return pat.sub(
+        lambda m: new if mask[m.start()] == text[m.start()] else m.group(0),
+        text,
     )
-
-    def repl(m: re.Match) -> str:
-        for s, e, q in spans:
-            if s <= m.start() < e:
-                if q == "'":
-                    return m.group(0)
-                if (s, e) != (m.start(), m.end()):
-                    return m.group(0)
-                break
-        rest = m.string[m.end():].lstrip()
-        if rest.startswith("("):
-            return m.group(0)
-        return new
-
-    return pat.sub(repl, text)
 
 
 def _parse_on_equalities(
@@ -687,10 +668,10 @@ def _resolve_right_qualifiers(
         )
 
     def _rewrite(text: str, skip: tuple[int, int] | None = None) -> str:
-        spans = _quoted_spans(text)
+        mask = _mask(text)
 
         def repl(m: re.Match) -> str:
-            if any(s <= m.start() < e for s, e, _ in spans):
+            if mask[m.start()] != text[m.start()]:
                 return m.group(0)
             if skip and skip[0] <= m.start() < skip[1]:
                 return m.group(0)
@@ -720,29 +701,15 @@ def _strip_union_tail(
     Returns (fragment-without-tail, [(order expr, is_desc), …],
     limit or None). QuestDB's tail (negative) and ``lo, hi`` range
     limits are REFUSED here — a clean error beats a wrong answer."""
-    depth, i, n = 0, 0, len(fragment)
-    cut = None
-    while i < n:
-        ch = fragment[i]
-        if ch == "'":
-            j = fragment.find("'", i + 1)
-            i = n if j < 0 else j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = re.match(
-                r"(?:ORDER\s+BY|LIMIT)\b", fragment[i:], re.IGNORECASE
+    cut = next(
+        (
+            m.start()
+            for m in _top_level(
+                _mask(fragment), r"(?i)(?<!\w)(?:ORDER\s+BY|LIMIT)\b"
             )
-            prev_ok = i == 0 or not (
-                fragment[i - 1].isalnum() or fragment[i - 1] == "_"
-            )
-            if m and prev_ok:
-                cut = i
-                break
-        i += 1
+        ),
+        None,
+    )
     if cut is None:
         return fragment, [], None
     head, tail = fragment[:cut].rstrip(), fragment[cut:].strip()
@@ -801,10 +768,9 @@ def _strip_union_tail(
 
 #: Top-level set-operation connectors (longest alternatives first so
 #: ``UNION ALL`` never half-matches as ``UNION``).
-_SET_OP_RE = re.compile(
-    r"(UNION\s+ALL|UNION|EXCEPT\s+ALL|EXCEPT"
-    r"|INTERSECT\s+ALL|INTERSECT)\s+",
-    re.IGNORECASE,
+_SET_OP_RE = (
+    r"(?i)(?<!\w)(UNION\s+ALL|UNION|EXCEPT\s+ALL|EXCEPT"
+    r"|INTERSECT\s+ALL|INTERSECT)\s+"
 )
 
 
@@ -817,29 +783,11 @@ def _split_union(text: str) -> tuple[list[str], list[str]] | None:
     CALLER's job (INTERSECT binds tighter than UNION/EXCEPT)."""
     frags: list[str] = []
     ops: list[str] = []
-    depth, i, start, n = 0, 0, 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = text.find("'", i + 1)
-            i = n if j < 0 else j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _SET_OP_RE.match(text, i)
-            prev_ok = i == 0 or not (
-                text[i - 1].isalnum() or text[i - 1] == "_"
-            )
-            if m and prev_ok:
-                frags.append(text[start:i].strip())
-                ops.append(re.sub(r"\s+", " ", m.group(1).upper()))
-                i = m.end()
-                start = i
-                continue
-        i += 1
+    start = 0
+    for m in _top_level(_mask(text), _SET_OP_RE):
+        frags.append(text[start:m.start()].strip())
+        ops.append(re.sub(r"\s+", " ", m.group(1).upper()))
+        start = m.end()
     if not ops:
         return None
     frags.append(text[start:].strip())
@@ -852,36 +800,19 @@ def _split_declares(text: str) -> tuple[list[tuple[str, str]], str] | None:
     m = re.match(r"^DECLARE\s+", text, re.IGNORECASE)
     if not m:
         return None
-    i = m.end()
-    # Bindings end at the first quote-aware top-level SELECT or WITH
-    # keyword (DECLARE composes with CTEs: DECLARE … WITH … SELECT …).
-    depth, n = 0, len(text)
-    sel_at = None
-    j = i
-    while j < n:
-        ch = text[j]
-        if ch == "'":
-            k = text.find("'", j + 1)
-            if k < 0:
-                return None
-            j = k + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and re.match(
-            r"(?:SELECT|WITH)\b", text[j:], re.IGNORECASE
-        ):
-            prev = text[j - 1]
-            if not (prev.isalnum() or prev == "_"):
-                sel_at = j
-                break
-        j += 1
+    # Bindings end at the first top-level SELECT or WITH keyword
+    # (DECLARE composes with CTEs: DECLARE … WITH … SELECT …).
+    sel_at = next(
+        (
+            k.start()
+            for k in _top_level(_mask(text), r"(?i)(?<!\w)(?:SELECT|WITH)\b")
+        ),
+        None,
+    )
     if sel_at is None:
         return None
     bindings = []
-    for item in _split_items(text[i:sel_at].strip()):
+    for item in _split_items(text[m.end():sel_at].strip()):
         bm = re.match(
             r"^@([A-Za-z_]\w*)\s*:=\s*(.+)$", item.strip(), re.DOTALL
         )
@@ -1056,36 +987,16 @@ def _find_call(text: str, start: int) -> tuple[int, int, int] | None:
     """Next QuestDB scalar call OUTSIDE string literals, as
     ``(match_start, args_start, args_end)`` with args_end at the
     matching close paren. ``None`` when no further call exists."""
-    i = start
-    n = len(text)
-    while i < n:
-        q = text.find("'", i)
-        m = _QDB_FN_RE.search(text, i)
-        if not m:
-            return None
-        if q != -1 and q < m.start():
-            # skip the quoted literal entirely
-            close = text.find("'", q + 1)
-            i = n if close < 0 else close + 1
-            continue
-        depth, j = 1, m.end()
-        while j < n and depth:
-            ch = text[j]
-            if ch == "'":
-                close = text.find("'", j + 1)
-                j = n if close < 0 else close + 1
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        if depth:
-            raise QuestDBSQLError(
-                f"unbalanced parentheses after {m.group(1)}("
-            )
-        return m.start(), m.end(), j - 1
-    return None
+    mask = _mask(text)
+    m = _QDB_FN_RE.search(mask, start)
+    if not m:
+        return None
+    close = _scan_balanced(mask, m.end() - 1)
+    if close is None:
+        raise QuestDBSQLError(
+            f"unbalanced parentheses after {m.group(1)}("
+        )
+    return m.start(), m.end(), close - 1
 
 
 def rewrite_questdb_scalars(text: str) -> str:
@@ -1453,14 +1364,11 @@ def _ws_norm_outside_literals(expr: str) -> str:
     from a computed select key only inside a literal silently grouped
     by the wrong expression (ADVICE r17). Case inside literals is
     preserved for the same reason."""
-    spans = _quoted_spans(expr)
-    out = []
-    for i, ch in enumerate(expr):
-        if any(s <= i < e for s, e, _ in spans):
-            out.append(ch)
-        elif not ch.isspace():
-            out.append(ch.lower())
-    return "".join(out)
+    return "".join(
+        ch.lower() if ch == k else ch
+        for ch, k in zip(expr, _mask(expr))
+        if not k.isspace()
+    )
 
 
 def _rewrite_pipe_concat(text: str) -> str:
@@ -1484,29 +1392,23 @@ def _rewrite_pipe_concat(text: str) -> str:
         "operand: "
     )
     while True:
-        spans = _quoted_spans(text)
-        pos = -1
-        for m in re.finditer(r"\|\|", text):
-            if not any(s <= m.start() < e for s, e, _ in spans):
-                pos = m.start()
-                break
+        mask = _mask(text)
+        pos = mask.find("||")
         if pos < 0:
             return text
+        quoted = {q.start(): q.end() for q in _QUOTED_RE.finditer(mask)}
+        quoted_by_end = {e: s for s, e in quoted.items()}
 
         def _left_extent(j: int) -> int:
             # j = index one past the operand's last char (spaces skipped)
-            ch = text[j - 1]
-            if ch in ("'", "`"):
-                for s, e, _ in spans:
-                    if e == j:
-                        return s
-                raise QuestDBSQLError(f"unbalanced quote before ||: {text!r}")
-            if ch == ")":
+            if j in quoted_by_end:
+                return quoted_by_end[j]
+            if mask[j - 1:j] == ")":
                 depth, k = 0, j - 1
                 while k >= 0:
-                    if text[k] == ")":
+                    if mask[k] == ")":
                         depth += 1
-                    elif text[k] == "(":
+                    elif mask[k] == "(":
                         depth -= 1
                         if depth == 0:
                             break
@@ -1515,11 +1417,11 @@ def _rewrite_pipe_concat(text: str) -> str:
                     raise QuestDBSQLError(f"unbalanced parens before ||: {text!r}")
                 # optional function name
                 w = k
-                while w > 0 and (text[w - 1].isalnum() or text[w - 1] in "_."):
+                while w > 0 and (mask[w - 1].isalnum() or mask[w - 1] in "_."):
                     w -= 1
                 return w
             w = j
-            while w > 0 and (text[w - 1].isalnum() or text[w - 1] in "_."):
+            while w > 0 and (mask[w - 1].isalnum() or mask[w - 1] in "_."):
                 w -= 1
             if w == j:
                 raise QuestDBSQLError(
@@ -1537,18 +1439,14 @@ def _rewrite_pipe_concat(text: str) -> str:
 
         def _right_extent(i: int) -> int:
             # i = index of the operand's first char (spaces skipped)
-            ch = text[i]
-            if ch in ("'", "`"):
-                for s, e, _ in spans:
-                    if s == i:
-                        return e
-                raise QuestDBSQLError(f"unbalanced quote after ||: {text!r}")
-            if ch == "(":
-                e = _scan_balanced(text, i)
+            if i in quoted:
+                return quoted[i]
+            if mask[i] == "(":
+                e = _scan_balanced(mask, i)
                 if e is None:
                     raise QuestDBSQLError(f"unbalanced parens after ||: {text!r}")
                 return e
-            m2 = re.match(r"[A-Za-z_][\w.]*|\d[\w.]*", text[i:])
+            m2 = re.match(r"[A-Za-z_][\w.]*|\d[\w.]*", mask[i:])
             if not m2:
                 raise QuestDBSQLError(
                     f"cannot determine the right || operand: {text[i:]!r}"
@@ -1559,9 +1457,9 @@ def _rewrite_pipe_concat(text: str) -> str:
                     f"(cannot scan its extent): …{text[i:i + 12]}"
                 )
             e = i + m2.end()
-            rest = text[e:].lstrip()
+            rest = mask[e:].lstrip()
             if rest.startswith("("):
-                e2 = _scan_balanced(text, text.index("(", e))
+                e2 = _scan_balanced(mask, mask.index("(", e))
                 if e2 is None:
                     raise QuestDBSQLError(f"unbalanced parens after ||: {text!r}")
                 return e2
@@ -1569,31 +1467,28 @@ def _rewrite_pipe_concat(text: str) -> str:
 
         # Walk the whole chain around the first ||.
         j = pos
-        while j > 0 and text[j - 1].isspace():
+        while j > 0 and mask[j - 1].isspace():
             j -= 1
         start = _left_extent(j)
-        if start > 0 and text[:start].rstrip()[-1:] and \
-                text[:start].rstrip()[-1] in arith:
+        if mask[:start].rstrip()[-1:] in arith:
             raise QuestDBSQLError(guard + text[max(0, start - 8):pos + 2])
         operands = [text[start:j]]
         cur = pos
         while True:
             i = cur + 2
-            while i < len(text) and text[i].isspace():
+            while i < len(mask) and mask[i].isspace():
                 i += 1
-            if i >= len(text):
+            if i >= len(mask):
                 raise QuestDBSQLError(f"dangling ||: {text!r}")
             e = _right_extent(i)
             operands.append(text[i:e])
             k = e
-            while k < len(text) and text[k].isspace():
+            while k < len(mask) and mask[k].isspace():
                 k += 1
-            if text[k:k + 2] == "||" and not any(
-                s <= k < se for s, se, _ in spans
-            ):
+            if mask[k:k + 2] == "||":
                 cur = k
                 continue
-            if k < len(text) and text[k] in arith:
+            if mask[k:k + 1] in arith:
                 raise QuestDBSQLError(guard + text[pos:k + 1])
             end = e
             break
@@ -1608,27 +1503,26 @@ def rewrite_regex_operators(text: str) -> str:
     """QuestDB regex-match operators and SYMBOL casts → Spark SQL:
     ``col ~ 'pat'`` / ``col !~ 'pat'`` become regexp_like (Spark parses
     a bare ``~`` as bitwise NOT), ``AS SYMBOL`` casts become STRING.
-    Literal-aware: a match starting inside a string literal — odd count
-    of quotes before it, doubled quotes counting twice — is left
-    untouched. Shared by the query lowering and the DDL UPDATE paths
-    (round 16: UPDATE's SET/WHERE used to miss this rewrite, so a
-    QuestDB-legal ``WHERE s ~ '…'`` was a hard parse error there)."""
-    def _outside_literal(pos: int, t: str) -> bool:
-        return t.count("'", 0, pos) % 2 == 0
+    Literal-aware: a match starting inside a string literal or quoted
+    identifier is left untouched. Shared by the query lowering and the
+    DDL UPDATE paths (round 16: UPDATE's SET/WHERE used to miss this
+    rewrite, so a QuestDB-legal ``WHERE s ~ '…'`` was a hard parse
+    error there)."""
+    def _outside(m: re.Match) -> bool:
+        # Each pass changes the text, so each takes a fresh ``mask``.
+        return mask[m.start()] == m.string[m.start()]
 
     def _regex_repl(m: re.Match) -> str:
-        if not _outside_literal(m.start(), m.string):
+        if not _outside(m):
             return m.group(0)
         call = f"regexp_like({m.group(1)}, {m.group(3)})"
         return f"NOT {call}" if m.group(2) == "!~" else call
 
+    mask = _mask(text)
     text = _REGEX_MATCH_RE.sub(_regex_repl, text)
+    mask = _mask(text)
     text = _SYMBOL_CAST_RE.sub(
-        lambda m: (
-            "AS STRING)" if _outside_literal(m.start(), m.string)
-            else m.group(0)
-        ),
-        text,
+        lambda m: "AS STRING)" if _outside(m) else m.group(0), text
     )
     # QuestDB (like PostgreSQL) treats NULL arguments to concat() as
     # EMPTY — concat('a', null, 'b') is 'ab'. Spark's concat returns
@@ -1653,12 +1547,9 @@ def rewrite_regex_operators(text: str) -> str:
     # never touches concat_ws itself (the \b cannot fall between t
     # and _).
     text = _rewrite_pipe_concat(text)
+    mask = _mask(text)
     return _CONCAT_CALL_RE.sub(
-        lambda m: (
-            "concat_ws('', "
-            if _outside_literal(m.start(), m.string)
-            else m.group(0)
-        ),
+        lambda m: "concat_ws('', " if _outside(m) else m.group(0),
         text,
     )
 
@@ -1759,45 +1650,26 @@ def _split_top_and(predicate: str) -> list[str] | None:
     respected, ``CASE … END`` nests like a paren, and the ``AND`` of a
     top-level ``BETWEEN … AND …`` stays inside its conjunct."""
     conjuncts: list[str] = []
-    depth, i, start, n = 0, 0, 0, len(predicate)
+    start, case_depth, open_betweens = 0, 0, 0
     has_or = False
-    open_betweens = 0
-    while i < n:
-        ch = predicate[i]
-        if ch == "'":
-            j = predicate.find("'", i + 1)
-            i = n if j < 0 else j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        else:
-            m = re.match(
-                r"(AND|OR|BETWEEN|CASE|END)\b", predicate[i:], re.IGNORECASE
-            )
-            word_boundary = i == 0 or not (
-                predicate[i - 1].isalnum() or predicate[i - 1] in "_."
-            )
-            if m and word_boundary:
-                word = m.group(1).upper()
-                if word == "CASE":
-                    depth += 1
-                elif word == "END":
-                    depth -= 1
-                elif depth == 0:
-                    if word == "BETWEEN":
-                        open_betweens += 1
-                    elif word == "OR":
-                        has_or = True
-                    elif open_betweens:
-                        open_betweens -= 1
-                    else:
-                        conjuncts.append(predicate[start:i].strip())
-                        start = i + 3
-                i += len(m.group(1))
-                continue
-        i += 1
+    for m in _top_level(
+        _mask(predicate), r"(?i)(?<![\w.])(AND|OR|BETWEEN|CASE|END)\b"
+    ):
+        word = m.group(1).upper()
+        if word == "CASE":
+            case_depth += 1
+        elif word == "END":
+            case_depth -= 1
+        elif case_depth == 0:
+            if word == "BETWEEN":
+                open_betweens += 1
+            elif word == "OR":
+                has_or = True
+            elif open_betweens:
+                open_betweens -= 1
+            else:
+                conjuncts.append(predicate[start:m.start()].strip())
+                start = m.end()
     conjuncts.append(predicate[start:].strip())
     return None if has_or else [c for c in conjuncts if c]
 
@@ -1821,10 +1693,12 @@ def _split_latest_where(
     allowed = {c.lower() for c in allowed}
     pre, post = [], []
     for c in conjuncts:
-        tokens = set(re.findall(
-            r"[a-z_]\w*", re.sub(r"'[^']*'", "''", c).lower()
-        ))
-        referenced = tokens & table_columns
+        # Words outside quotes, and whole backticked identifiers.
+        tokens = {
+            c[m.start() + 1:m.end() - 1] if m.group(1) else m.group(0)
+            for m in re.finditer(rf"(`{_FILL}+`)|[A-Za-z_]\w*", _mask(c))
+        }
+        referenced = {t.lower() for t in tokens} & table_columns
         (pre if referenced <= allowed else post).append(f"({c})")
     return (
         " AND ".join(pre) if pre else None,
@@ -1835,26 +1709,13 @@ def _split_latest_where(
 def _split_items(text: str) -> list[str]:
     """Split a select/order/argument list on top-level commas.
 
-    Tracks paren depth AND string literals, so a quoted argument that
-    contains a comma (``to_utc(ts, 'a,b')``) stays one item — matching
-    the quote handling in ``_find_call`` (round-12 ADVICE)."""
-    items, depth, cur, in_str = [], 0, [], False
-    for ch in text:
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                items.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    if cur and "".join(cur).strip():
-        items.append("".join(cur).strip())
-    return items
+    Cuts on the ``_mask``, so a quoted argument that contains a comma
+    (``to_utc(ts, 'a,b')``) stays one item (round-12 ADVICE)."""
+    cuts = [m.start() for m in _top_level(_mask(text), ",")]
+    items = [
+        text[a + 1:b].strip() for a, b in zip([-1] + cuts, cuts + [len(text)])
+    ]
+    return items if items[-1] else items[:-1]
 
 
 def _default_agg_alias(fn: str, arg: str) -> str:
@@ -1883,7 +1744,7 @@ def _match_agg_expr(item: str) -> tuple[str, str, str | None] | None:
     )
     if not m:
         return None
-    close = _scan_balanced(item, m.end() - 1)
+    close = _scan_balanced(_mask(item), m.end() - 1)
     if close is None:
         return None
     rest = item[close:].strip()

@@ -302,6 +302,15 @@ def test_latest_on_where_split(spark, trades):
     )
     rows = out2.collect()
     assert len(rows) == 1 and rows[0].price == 13.0
+    # A backticked column (a reserved word) is still a column reference;
+    # a column name inside a string literal is not.
+    from questdb_etl_jobs_spark.sql.dialect import _split_latest_where
+
+    assert _split_latest_where(
+        "`desc` > 1 AND sym = 'price' AND ts > 0",
+        {"desc", "sym", "ts", "price"},
+        {"sym", "ts"},
+    ) == ("(sym = 'price') AND (ts > 0)", "(`desc` > 1)")
 
 
 # ---------------------------------------------------------------------------
@@ -4714,6 +4723,70 @@ def test_concat_null_is_empty(spark):
         "GROUP BY concat(s, t) ORDER BY key",
     ).collect()
     assert [(r.key, r.n) for r in got] == [("a", 1), ("xy", 1)], got
+
+
+def test_pipe_concat_operand_extents_on_the_mask(spark):
+    """The left operand of ``||`` is scanned on the quote mask, so a
+    paren inside a string literal is not operand structure: the whole
+    ``concat('(', s)`` call is the operand. Counting that paren used to
+    corrupt the text (``'('`` case) or refuse it as unbalanced (``')'``
+    case). A ``||`` with nothing before it has no left operand; the
+    scan used to wrap around to the text's last character."""
+    from questdb_etl_jobs_spark.sql.dialect import rewrite_regex_operators
+
+    with pytest.raises(QuestDBSQLError, match=r"left \|\| operand"):
+        rewrite_regex_operators("|| f(s)")
+    spark.createDataFrame([("a",)], "s string").createOrReplaceTempView(
+        "__pcl"
+    )
+    for paren in ("(", ")"):
+        got = questdb_sql(
+            spark, f"SELECT concat('{paren}', s) || 'x' AS c FROM __pcl"
+        ).collect()
+        assert [r.c for r in got] == [f"{paren}ax"], got
+
+
+def test_only_mask_walks_quote_characters():
+    """Where quoted spans lie is decided in one place: ``_mask`` (and
+    ``_normalize_string_literals``, which reads raw QuestDB quoting
+    before any rewrite). Every other function of the dialect finds its
+    positions on the mask, so none compares a character to a quote or
+    searches the text for one."""
+    import ast
+    from pathlib import Path
+
+    from questdb_etl_jobs_spark.sql import dialect
+
+    quotes = {"'", "`"}
+    allowed = {"_mask", "_normalize_string_literals"}
+
+    def constants(node: ast.AST) -> set:
+        seq = isinstance(node, (ast.Tuple, ast.List, ast.Set))
+        elts = node.elts if seq else [node]
+        return {e.value for e in elts if isinstance(e, ast.Constant)}
+
+    offenders = []
+    tree = ast.parse(Path(dialect.__file__).read_text())
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef) or fn.name in allowed:
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Compare):
+                hit = any(
+                    constants(o) & quotes
+                    for o in (node.left, *node.comparators)
+                )
+            else:
+                hit = (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("find", "rfind", "index", "count")
+                    and bool(node.args)
+                    and bool(constants(node.args[0]) & quotes)
+                )
+            if hit:
+                offenders.append(f"{fn.name}:{node.lineno}")
+    assert offenders == []
 
 
 def test_questdb_scalar_spellings_round17(spark):

@@ -1444,3 +1444,71 @@ def test_sample_by_fuzz_matches_duckdb_epoch_floor(spark, qs):
     assert sorted(got, key=repr) == sorted(want, key=repr), (
         q, duck_q, sorted(got, key=repr)[:4], sorted(want, key=repr)[:4]
     )
+
+
+_SQL_PIECES = [
+    "a", "b1", "sym", "f", " ", ",", "(", ")", " AND ", " OR ",
+    " UNION ALL ", " ORDER BY ", " BETWEEN ", " CASE ", " END ",
+]
+_literal = st.lists(
+    st.sampled_from(_SQL_PIECES + ["''"]), max_size=4
+).map(lambda parts: ("'", "".join(parts)))
+_identifier = st.lists(st.sampled_from(_SQL_PIECES), max_size=4).map(
+    lambda parts: ("`", "".join(parts))
+)
+_segments = st.lists(
+    st.one_of(
+        st.sampled_from(_SQL_PIECES).map(lambda p: ("", p)),
+        _literal,
+        _identifier,
+    ),
+    max_size=14,
+)
+
+
+def _piece_spans(text: str, pieces: list[str]) -> list[tuple[int, int]]:
+    """Where each returned piece (an in-order, stripped slice) sits in
+    ``text``."""
+    spans, pos = [], 0
+    for piece in pieces:
+        start = text.index(piece, pos)
+        pos = start + len(piece)
+        spans.append((start, pos))
+    return spans
+
+
+@settings(max_examples=300, deadline=None, derandomize=True, database=None)
+@given(segments=_segments)
+def test_splitters_cut_the_same_with_quoted_contents_neutralized(segments):
+    """Metamorphic: what a quoted span holds cannot move a cut. The
+    same text with every literal's and quoted identifier's contents
+    replaced by same-length filler splits at the same positions, for
+    each splitter that walks quote and paren structure."""
+    from questdb_etl_jobs_spark.sql.dialect import (
+        _mask,
+        _scan_balanced,
+        _split_items,
+        _split_top_and,
+        _split_union,
+    )
+
+    text = "".join(q + body + q for q, body in segments)
+    plain = "".join(q + ("x" * len(body) if q else body) + q
+                    for q, body in segments)
+
+    def cuts(t: str) -> tuple:
+        conjuncts = _split_top_and(t)
+        union = _split_union(t)
+        return (
+            _piece_spans(t, _split_items(t)),
+            None if conjuncts is None else _piece_spans(t, conjuncts),
+            None if union is None else (
+                _piece_spans(t, union[0]), union[1]
+            ),
+            [
+                _scan_balanced(_mask(t), i)
+                for i, ch in enumerate(plain) if ch == "("
+            ],
+        )
+
+    assert cuts(text) == cuts(plain), (text, plain)
